@@ -9,15 +9,15 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
  *
  * A global `row_number()`/`ntile()` over an unpartitioned `Window.orderBy`
  * funnels every row through ONE task — correct, but a guaranteed straggler
- * (and eventually an OOM) at 100 TB. The scale-safe plan is the one
- * [[Sampler.exactN]] already uses for its rank selection: a RANGE-partitioned
- * sort (each of N tasks sorts ~1/N of the data; partition i's keys all
- * precede partition i+1's) followed by `zipWithIndex`, which assigns
+ * (and eventually an OOM) at 100 TB. The scale-safe plan is a
+ * RANGE-partitioned sort (each of N tasks sorts ~1/N of the data;
+ * partition i's keys all precede partition i+1's) followed by
+ * `zipWithIndex`, which assigns
  * contiguous global indices from per-partition counts with one extra
  * lightweight count job — no single task ever holds the whole input.
  *
  * This object factors that recipe out so every total-order consumer
- * (curriculum ordering, equi-depth histograms, exact sampling) shares it
+ * (curriculum ordering, equi-depth histograms, systematic sampling) shares it
  * instead of re-inventing the global window.
  *
  * Determinism: ranks are reproducible for a given dataset iff `sortCols`

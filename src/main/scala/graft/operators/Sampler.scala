@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import org.apache.spark.sql.types.DoubleType
 
 /**
  * Uniform random sampling of a table.
@@ -24,9 +24,10 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
  *    (Meng, "Scalable Simple Random Sampling and Stratified Sampling",
  *    ICML 2013): tag rows with u ~ U[0,1), keep the n smallest. A
  *    high-probability threshold q filters ~n + O(sqrt(n)) candidates in one
- *    scan; the exact n-smallest selection then runs on the small candidate
- *    set with a distributed range-sort + zipWithIndex — the driver never
- *    holds rows, so this survives n in the billions (unlike
+ *    scan and materializes them; the exact n-smallest selection then needs
+ *    only the O(sqrt(n)) excess: the driver collects those boundary rank
+ *    KEYS (never rows) and the sample is the candidates below the cut key.
+ *    No range sort and no shuffle, so this survives n in the billions (unlike
  *    `orderBy(rand).limit(n)`, whose TakeOrderedAndProject funnels n rows
  *    to the driver, or `rdd.takeSample`, likewise driver-bound).
  */
@@ -36,6 +37,7 @@ object Sampler {
 
   private val RCOL = "__graft_sample_r"
   private val GRANK = "__graft_sample_rank"
+  private val TIE = "__graft_sample_tie"
 
   /** Bernoulli sampling: output size is binomial(n, ratio), single pass. */
   def bernoulli(df: DataFrame, ratio: Double, seed: Long): DataFrame = {
@@ -69,33 +71,61 @@ object Sampler {
       seed: Long,
       knownTotal: Long = -1L,
       rankCol: Option[Column] = None): DataFrame = {
-    val spark = df.sparkSession
     val total = if (knownTotal >= 0) knownTotal else df.count()
     if (n <= 0 || total == 0) return df.limit(0)
     if (n >= total) return df
-
     val withR = df.withColumn(RCOL, rankCol.getOrElse(rand(seed)).cast(DoubleType))
+    smallestN(withR, col(RCOL), n, total)
+  }
 
-    // ScaSRS acceptance threshold: q >= p with P[|{u < q}| < n] < 1e-8,
-    // so one filtering scan yields enough candidates w.h.p.
+  /**
+   * The n rows of `withR` (0 < n < total) with the smallest
+   * (`RCOL`, candidate position) keys, NULL ranks last; drops `RCOL`.
+   *
+   * ScaSRS acceptance threshold: q >= p with P[|{u < q}| < n] < 1e-8, so
+   * one filtering scan keeps c = n + O(sqrt(n log 1/delta)) candidates
+   * w.h.p. They are materialized once, tagged with their position (the
+   * tie-break), and coalesced to the input's rows per partition. The
+   * driver then collects only the c - n largest KEYS — never rows — and
+   * the result is a lazy filter of the candidates against the cut key: no
+   * shuffle, and the sink reads the candidates, not the input.
+   * When the threshold kept fewer than n (prob < 1e-8, or a non-uniform
+   * rank), the same path reruns over every row.
+   *
+   * @param u `RCOL` mapped to a U[0,1) double, the threshold's scale
+   */
+  private def smallestN(withR: DataFrame, u: Column, n: Long, total: Long): DataFrame = {
     val p = n.toDouble / total
     val gamma = -math.log(1e-8) / total
     val q = math.min(1.0, p + gamma + math.sqrt(gamma * gamma + 2.0 * gamma * p))
 
-    val candidates = withR.filter(col(RCOL) < q)
-    candidates.persist()
-    try {
-      val candCount = candidates.count()
-      val pool = if (candCount >= n) candidates else withR // fallback: full sort (prob < 1e-8)
-      // Distributed exact selection of the n smallest ranks: GlobalRank's
-      // range-partitioned sort + zipWithIndex over ~n candidate rows — the
-      // shared total-order primitive; no driver materialization.
-      GlobalRank.withGlobalRank(pool, Seq(col(RCOL).asc), GRANK)
-        .filter(col(GRANK) <= n)
-        .drop(GRANK, RCOL)
-    } finally {
-      candidates.unpersist(blocking = false)
+    // the RDD count is one job; Dataset.count would add an aggregate
+    // exchange, which adaptive execution runs as a job of its own
+    def candidates(pool: DataFrame): (DataFrame, Long) = {
+      val cand = pool.withColumn(TIE, monotonically_increasing_id()).localCheckpoint()
+      (cand, cand.queryExecution.toRdd.count())
     }
+    val first = candidates(withR.filter(u < q))
+    val (cand, c) = if (first._2 >= n) first else candidates(withR)
+    val inParts = cand.queryExecution.toRdd.getNumPartitions
+    val kept = cand.coalesce(math.max(1, math.ceil(inParts.toDouble * n / total).toInt))
+    val sample = if (c == n) kept else {
+      // the c - n largest keys; the rows before the smallest of them are
+      // the n smallest
+      require(c - n <= Int.MaxValue, s"sample cutoff needs ${c - n} keys on the driver")
+      val cut = cand.select(col(RCOL), col(TIE))
+        .orderBy(col(RCOL).desc_nulls_first, col(TIE).desc)
+        .limit((c - n).toInt).collect().last
+      kept.filter(keyBefore(cut))
+    }
+    sample.drop(RCOL, TIE)
+  }
+
+  /** (RCOL, TIE) < cut in the NULLS-LAST key order. */
+  private def keyBefore(cut: Row): Column = {
+    val tieBefore = col(TIE) < cut.getLong(1)
+    if (cut.isNullAt(0)) col(RCOL).isNotNull || tieBefore
+    else col(RCOL) < lit(cut.get(0)) || (col(RCOL) === lit(cut.get(0)) && tieBefore)
   }
 
   /**
@@ -108,13 +138,14 @@ object Sampler {
    * `QUALIFY row_number() OVER (ORDER BY md5(...)) <= n`, which is what
    * lets a full sample->join pipeline be hash-oracle-checked end-to-end.
    *
-   * Scale shape matches [[exactN]]: a ScaSRS-style threshold on the rank's
-   * 52-bit numeric prefix cuts ~n + O(sqrt n) candidates in one scan, then
-   * [[GlobalRank]]'s distributed range-sort selects the exact n smallest —
-   * no driver funnel, no full sort of the table.
+   * Same selection as [[exactN]]: a ScaSRS threshold on the rank's 52-bit
+   * numeric prefix cuts ~n + O(sqrt n) candidates in one scan, and an
+   * O(sqrt n)-key cutoff picks the exact n smallest — no driver row
+   * funnel, no sort of the table.
    *
    * @param rank a LOWERCASE-HEX string column (md5-style), uniform in its
-   *             leading bits; ties (hash collisions) are broken arbitrarily
+   *             leading bits; ties (hash collisions) are broken by
+   *             candidate position; NULL ranks sort last
    */
   def exactNByHexRank(df: DataFrame, ratio: Double, rank: Column): DataFrame = {
     require(ratio >= 0.0 && ratio <= 1.0, s"ratio must be in [0,1], got $ratio")
@@ -122,23 +153,10 @@ object Sampler {
     val n = (total * ratio).toLong
     if (n <= 0) return df.limit(0)
     if (n >= total) return df
-    val withR = df.withColumn(RCOL, rank)
     // numeric prefix: first 13 hex chars = 52 bits, exact in a double
     val u = conv(substring(col(RCOL), 1, 13), 16, 10).cast(DoubleType) /
       lit((1L << 52).toDouble)
-    val p = n.toDouble / total
-    val gamma = -math.log(1e-8) / total
-    val q = math.min(1.0, p + gamma + math.sqrt(gamma * gamma + 2.0 * gamma * p))
-    val candidates = withR.filter(u < q)
-    candidates.persist()
-    try {
-      val pool = if (candidates.count() >= n) candidates else withR
-      GlobalRank.withGlobalRank(pool, Seq(col(RCOL).asc), GRANK)
-        .filter(col(GRANK) <= n)
-        .drop(GRANK, RCOL)
-    } finally {
-      candidates.unpersist(blocking = false)
-    }
+    smallestN(df.withColumn(RCOL, rank), u, n, total)
   }
 
   /**
@@ -341,11 +359,10 @@ object Sampler {
     require(ratio >= 0.0 && ratio <= 1.0,
       s"ratio must be in [0,1], got $ratio (the reference would loop forever for ratio>1)")
     val df = spark.read.parquet(path)
-    val cols = df.columns.map(col).toSeq // drop _metadata from output
-    val withMeta = spark.read.parquet(path).select((cols :+ col("_metadata")): _*)
     val total = df.count()
     val n = (total * ratio).toLong
-    exactN(withMeta, n, seed, knownTotal = total, rankCol = Some(positionalRank(seed)))
-      .select(cols: _*)
+    // positionalRank reads df's hidden _metadata column; the output keeps
+    // df's visible columns only
+    exactN(df, n, seed, knownTotal = total, rankCol = Some(positionalRank(seed)))
   }
 }

@@ -60,9 +60,16 @@ class PlanSpec extends SparkSpec {
 
   test("exact sampler never funnels rows to the driver (no CollectLimit/TakeOrdered)") {
     val li = spark.read.parquet(s"$sf0001/lineitem.parquet")
-    val sampled = graft.operators.Sampler.exact(li, 0.01, 42L)
-    val plan = sampled.queryExecution.executedPlan.toString
-    assert(!plan.contains("CollectLimit") && !plan.contains("TakeOrderedAndProject"), plan)
+    val samples = Seq(
+      graft.operators.Sampler.exact(li, 0.01, 42L),
+      graft.operators.Sampler.exactFromParquet(spark, s"$sf0001/lineitem.parquet", 0.01, 42L))
+    for (sampled <- samples) {
+      val plan = sampled.queryExecution.executedPlan.toString
+      assert(!plan.contains("CollectLimit") && !plan.contains("TakeOrderedAndProject"), plan)
+      // the selection is a filter over the materialized candidates: no
+      // range sort (or any other exchange) left on the sample's path
+      assert(!plan.contains("Exchange"), plan)
+    }
   }
 
   test("pivot with pinned values plans as aggregates only — no distinct-values pre-job") {

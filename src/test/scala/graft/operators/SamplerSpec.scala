@@ -56,6 +56,43 @@ class SamplerSpec extends SparkSpec {
     assert(a.exceptAll(b).count() === 0 && b.exceptAll(a).count() === 0)
   }
 
+  test("exactFromParquet: exactly the n smallest positional ranks (brute-force replay)") {
+    val path = s"$sf0001/lineitem.parquet"
+    val n = (total * 0.02).toLong
+    val want = spark.read.parquet(path).withColumn("__r", Sampler.positionalRank(7L))
+      .orderBy($"__r").limit(n.toInt).drop("__r")
+    val got = Sampler.exactFromParquet(spark, path, 0.02, 7L)
+    assert(got.count() === n)
+    assert(RelCheck.multisetEquals(got, want))
+  }
+
+  test("constant rank: all ties, too few threshold candidates -> still exactly n rows") {
+    // every key ties on the rank, so only the position tie-break separates
+    // them. n = 50: lit(0.99) sits above the threshold, the first scan
+    // keeps nothing and the fallback reruns over every row. n = total - 10:
+    // the threshold is 1, and the cut drops the 10 largest keys.
+    for (n <- Seq(50L, total - 10)) {
+      val got = Sampler.exactN(li, n, 42L, rankCol = Some(lit(0.99)))
+      assert(got.count() === n, s"n=$n")
+      assert(got.schema === li.schema)
+      assert(got.intersectAll(li).count() === n, s"n=$n: not a sub-multiset")
+    }
+  }
+
+  test("the sample keeps the input's rows per partition: 8 files -> 1% in 1, 50% in 4") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_sample8").toString + "/in"
+    li.repartition(8).write.parquet(dir)
+    // one split per file: without this floor, local[4] packs the 8 small
+    // files two to a split
+    spark.conf.set("spark.sql.files.minPartitionNum", "8")
+    try {
+      assert(spark.read.parquet(dir).rdd.getNumPartitions === 8)
+      def parts(r: Double) = Sampler.exactFromParquet(spark, dir, r, 5L).rdd.getNumPartitions
+      assert(parts(0.01) === 1)
+      assert(parts(0.5) === 4)
+    } finally spark.conf.unset("spark.sql.files.minPartitionNum")
+  }
+
   test("exactNByHexRank: exactly the n lexicographically-smallest md5 ranks, engine-replayable") {
     import org.apache.spark.sql.functions.{col, concat_ws, lit, md5}
     val li = spark.read.parquet(s"$sf0001/lineitem.parquet")
@@ -81,6 +118,15 @@ class SamplerSpec extends SparkSpec {
     assert(Sampler.exactNByHexRank(li, 0.0, rk).count() === 0)
     assert(Sampler.exactNByHexRank(li, 1.0, rk).count() === total)
     intercept[IllegalArgumentException] { Sampler.exactNByHexRank(li, 1.5, rk) }
+  }
+
+  test("exactNByHexRank: NULL ranks sort last; too few non-NULL ranks still give exactly n") {
+    // only ids 1-4 have a key, so only they get a non-NULL rank
+    val df = (1L to 20L).toDF("id").withColumn("k", when($"id" <= 4, $"id"))
+    def ids(ratio: Double) = Sampler.exactNByHexRank(df, ratio, Sampler.hexRank("s", $"k"))
+      .select($"id").as[Long].collect().toSet
+    assert(ids(0.1).size === 2 && ids(0.1).subsetOf((1L to 4L).toSet))
+    assert(ids(0.5).size === 10 && (1L to 4L).toSet.subsetOf(ids(0.5)))
   }
 
   test("exactN caps at total and handles n=0") {
