@@ -1,6 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import scala.annotation.tailrec
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
@@ -22,11 +26,12 @@ import org.apache.spark.sql.types.DoubleType
  *    the documented approximate fast path (single scan, no shuffle).
  *  - [[exact]] / [[exactN]]: exact output cardinality at scale via ScaSRS
  *    (Meng, "Scalable Simple Random Sampling and Stratified Sampling",
- *    ICML 2013): tag rows with u ~ U[0,1), keep the n smallest. A
- *    high-probability threshold q filters ~n + O(sqrt(n)) candidates in one
- *    scan and materializes them; the exact n-smallest selection then needs
- *    only the O(sqrt(n)) excess: the driver collects those boundary rank
- *    KEYS (never rows) and the sample is the candidates below the cut key.
+ *    ICML 2013): tag rows with u ~ U[0,1), keep the n smallest. Two
+ *    high-probability thresholds split one scan's ~n + O(sqrt(n))
+ *    materialized candidates into rows accepted outright and an
+ *    O(sqrt(n)) wait-list; the driver collects only wait-list rank KEYS
+ *    (never rows, never more than the wait-list holds) and the sample is
+ *    the candidates below the cut key.
  *    No range sort and no shuffle, so this survives n in the billions (unlike
  *    `orderBy(rand).limit(n)`, whose TakeOrderedAndProject funnels n rows
  *    to the driver, or `rdd.takeSample`, likewise driver-bound).
@@ -74,59 +79,185 @@ object Sampler {
     val total = if (knownTotal >= 0) knownTotal else df.count()
     if (n <= 0 || total == 0) return df.limit(0)
     if (n >= total) return df
-    val withR = df.withColumn(RCOL, rankCol.getOrElse(rand(seed)).cast(DoubleType))
-    smallestN(withR, col(RCOL), n, total)
+    smallestN(df, rankCol.getOrElse(rand(seed)).cast(DoubleType), n, total).sample
   }
 
   /**
-   * The n rows of `withR` (0 < n < total) with the smallest
-   * (`RCOL`, candidate position) keys, NULL ranks last; drops `RCOL`.
+   * One exact selection and what its cut cost.
    *
-   * ScaSRS acceptance threshold: q >= p with P[|{u < q}| < n] < 1e-8, so
-   * one filtering scan keeps c = n + O(sqrt(n log 1/delta)) candidates
-   * w.h.p. They are materialized once, tagged with their position (the
-   * tie-break), and coalesced to the input's rows per partition. The
-   * driver then collects only the c - n largest KEYS — never rows — and
-   * the result is a lazy filter of the candidates against the cut key: no
-   * shuffle, and the sink reads the candidates, not the input.
-   * When the threshold kept fewer than n (prob < 1e-8, or a non-uniform
-   * rank), the same path reruns over every row.
-   *
-   * @param u `RCOL` mapped to a U[0,1) double, the threshold's scale
+   * @param accepted     rows taken without a key comparison
+   * @param waitList     candidates the cut chose among, after any narrowing
+   * @param keysToDriver rank keys the cut sent to the driver
    */
-  private def smallestN(withR: DataFrame, u: Column, n: Long, total: Long): DataFrame = {
-    val p = n.toDouble / total
-    val gamma = -math.log(1e-8) / total
-    val q = math.min(1.0, p + gamma + math.sqrt(gamma * gamma + 2.0 * gamma * p))
+  private[operators] final case class Selection(
+      sample: DataFrame, accepted: Long, waitList: Long, keysToDriver: Long)
 
-    // the RDD count is one job; Dataset.count would add an aggregate
-    // exchange, which adaptive execution runs as a job of its own
-    def candidates(pool: DataFrame): (DataFrame, Long) = {
+  /**
+   * The n rows of `df` (0 < n < total) with the smallest (`rank`,
+   * candidate position) keys, NULL ranks last.
+   *
+   * ScaSRS with both of Meng's thresholds at failure probability 1e-8: one
+   * filtering scan keeps the rows with u < hi (at least n w.h.p.),
+   * materializes them once, tags each with its position (the tie-break)
+   * and counts per partition, in one job, the rows with u < lo (at most n
+   * w.h.p.), which are accepted outright, and the wait-list lo <= u < hi,
+   * which holds O(sqrt(n log 1/delta)) rows. Only the wait-list reaches
+   * the cut: the driver collects the n - accepted smallest wait-list KEYS,
+   * never rows and never more keys than the wait-list holds, whatever the
+   * partition count. The sample is a lazy filter of the candidates,
+   * coalesced to the input's rows per partition: no shuffle, and the sink
+   * reads the candidates, not the input.
+   *
+   * A rank that is not uniform stays exact and keeps that driver bound, at
+   * the cost of more jobs:
+   *  - too few candidates: one rescan with thresholds fitted to the rank
+   *    density the first scan saw, then a scan of every row;
+   *  - more than n accepted: the accepted rows join the wait-list;
+   *  - a wait-list over max(2^16, twice the expected size) rows is
+   *    narrowed by bisection on u, each step one count over the
+   *    candidates. A wait-list of one rank value is cut by position from
+   *    per-partition counts, and so are the NULL ranks that fill a
+   *    shortfall. Only a wait-list whose u is one value while its ranks
+   *    differ (a hex rank not uniform in its leading bits) sends all its
+   *    keys.
+   *
+   * @param u the rank mapped monotonically to a double, U[0,1) for a
+   *          uniform rank: the thresholds' scale
+   */
+  private[operators] def smallestN(
+      df: DataFrame,
+      rank: Column,
+      n: Long,
+      total: Long,
+      u: Column = col(RCOL)): Selection = {
+    val withR = df.withColumn(RCOL, rank)
+    val (lo0, hi0) = thresholds(n, total.toDouble)
+    // the most keys the cut collects without narrowing the wait-list
+    val budget = math.max(1L << 16, math.ceil(2 * (hi0 - lo0) * total).toLong)
+
+    // one threshold scan: the rows with u < hi (every row, NULL ranks too,
+    // once hi reaches 1), with per-partition counts of three bands:
+    // 0 = u < lo, 1 = any other non-NULL u, 2 = NULL u
+    @tailrec def scan(lo: Double, hi: Double, rescans: Int): (DataFrame, Double, Array[Array[Long]]) = {
+      val pool = if (hi < 1.0) withR.filter(u < hi) else withR
       val cand = pool.withColumn(TIE, monotonically_increasing_id()).localCheckpoint()
-      (cand, cand.queryExecution.toRdd.count())
+      val counts = bucketCounts(cand, when(u < lo, 0).when(u.isNotNull, 1).otherwise(2), 3)
+      val c = counts.iterator.map(_.sum).sum
+      if (c >= n || hi >= 1.0) (cand, lo, counts)
+      else {
+        release(cand)
+        val density = c / hi // non-NULL rows per unit of u, as this scan saw
+        if (rescans == 0 && c > 0 && n < density) {
+          val (l, h) = thresholds(n, density)
+          scan(l, h, 1)
+        } else scan(lo, 1.0, rescans + 1)
+      }
     }
-    val first = candidates(withR.filter(u < q))
-    val (cand, c) = if (first._2 >= n) first else candidates(withR)
+    val (cand, lo1, counts) = scan(lo0, hi0, 0)
+
+    var lo = lo1
+    var top: Option[Double] = None // the wait-list's bound on u once narrowed
+    var accepted = counts.iterator.map(_(0)).sum
+    var waitParts = counts.map(_(1))
+    if (accepted > n) {
+      lo = Double.NegativeInfinity; accepted = 0; waitParts = counts.map(c => c(0) + c(1))
+    }
+    def inWait: Column = top.foldLeft(u >= lo)((w, t) => w && u < t)
+    var m = n - accepted // the wait-list rows the sample still needs
+    var tied = false     // every wait-list rank is equal
+    var splits = true    // u still separates the wait-list
+    while (m < waitParts.sum && waitParts.sum > budget && !tied && splits) {
+      val r = cand.filter(inWait).agg(min(u), max(u), min(col(RCOL)) === max(col(RCOL))).head()
+      if (r.getBoolean(2)) tied = true
+      else if (r.getDouble(0) == r.getDouble(1)) splits = false
+      else {
+        val pivot = between(r.getDouble(0), r.getDouble(1))
+        val parts = bucketCounts(cand, when(inWait, when(u < pivot, 0).otherwise(1)), 2)
+        val below = parts.iterator.map(_(0)).sum
+        if (below >= m) { top = Some(pivot); waitParts = parts.map(_(0)) }
+        else { lo = pivot; accepted += below; m -= below; waitParts = parts.map(_(1)) }
+      }
+    }
+
+    val w = waitParts.sum
+    val (pick, keys) =
+      if (m == 0) (lit(false), 0L)
+      else if (m == w) (inWait, 0L)
+      else if (m > w) // only before any narrowing: all non-NULL ranks, then NULLs by position
+        (inWait || (u.isNull && col(TIE) <= mthTie(cand, u.isNull, counts.map(_(2)), m - w)), 1L)
+      else if (tied) (inWait && col(TIE) <= mthTie(cand, inWait, waitParts, m), 1L)
+      else {
+        require(m <= Int.MaxValue, s"sample cutoff needs $m keys on the driver")
+        // takeOrdered: each partition sends at most m of its wait-list keys
+        val cut = cand.filter(inWait).select(col(RCOL), col(TIE))
+          .orderBy(col(RCOL), col(TIE)).limit(m.toInt).collect().last
+        val r = lit(cut.get(0))
+        (inWait && (col(RCOL) < r || (col(RCOL) === r && col(TIE) <= cut.getLong(1))),
+          waitParts.iterator.map(math.min(_, m)).sum)
+      }
     val inParts = cand.queryExecution.toRdd.getNumPartitions
-    val kept = cand.coalesce(math.max(1, math.ceil(inParts.toDouble * n / total).toInt))
-    val sample = if (c == n) kept else {
-      // the c - n largest keys; the rows before the smallest of them are
-      // the n smallest
-      require(c - n <= Int.MaxValue, s"sample cutoff needs ${c - n} keys on the driver")
-      val cut = cand.select(col(RCOL), col(TIE))
-        .orderBy(col(RCOL).desc_nulls_first, col(TIE).desc)
-        .limit((c - n).toInt).collect().last
-      kept.filter(keyBefore(cut))
-    }
-    sample.drop(RCOL, TIE)
+    val sample = cand.coalesce(math.max(1, math.ceil(inParts.toDouble * n / total).toInt))
+      .filter(u < lo || pick)
+      .drop(RCOL, TIE)
+    Selection(sample, accepted, w, keys)
   }
 
-  /** (RCOL, TIE) < cut in the NULLS-LAST key order. */
-  private def keyBefore(cut: Row): Column = {
-    val tieBefore = col(TIE) < cut.getLong(1)
-    if (cut.isNullAt(0)) col(RCOL).isNotNull || tieBefore
-    else col(RCOL) < lit(cut.get(0)) || (col(RCOL) === lit(cut.get(0)) && tieBefore)
+  /**
+   * Meng's ScaSRS thresholds (lo, hi) for n of `total` U[0,1) ranks: more
+   * than n ranks below lo, or fewer than n below hi, each have probability
+   * under 1e-8.
+   */
+  private def thresholds(n: Long, total: Double): (Double, Double) = {
+    val p = n / total
+    val g1 = -math.log(1e-8) / total
+    val g2 = 2.0 * g1 / 3.0
+    (math.max(0.0, p + g2 - math.sqrt(g2 * g2 + 3.0 * g2 * p)),
+      math.min(1.0, p + g1 + math.sqrt(g1 * g1 + 2.0 * g1 * p)))
   }
+
+  /**
+   * Per-partition counts of the int column `bucket` (0 until k; NULL is
+   * not counted) over materialized candidates: one job, no exchange.
+   */
+  private def bucketCounts(cand: DataFrame, bucket: Column, k: Int): Array[Array[Long]] =
+    cand.select(bucket).queryExecution.toRdd.mapPartitions { rows =>
+      val c = new Array[Long](k)
+      rows.foreach(r => if (!r.isNullAt(0)) c(r.getInt(0)) += 1)
+      Iterator.single(c)
+    }.collect()
+
+  /**
+   * Position (`TIE`) of the m-th candidate matching `rows`, in position
+   * order, from their per-partition counts: one job over the one
+   * partition that holds it.
+   */
+  private def mthTie(cand: DataFrame, rows: Column, perPart: Array[Long], m: Long): Long = {
+    val before = perPart.scanLeft(0L)(_ + _)
+    val p = before.lastIndexWhere(_ < m)
+    val skip = m - 1 - before(p)
+    val ties = cand.filter(rows).select(col(TIE)).queryExecution.toRdd
+    cand.sparkSession.sparkContext.runJob(ties, (it: Iterator[InternalRow]) => {
+      var (i, tie) = (0L, -1L)
+      while (i <= skip && it.hasNext) { tie = it.next().getLong(0); i += 1 }
+      tie
+    }, Seq(p)).head
+  }
+
+  /** A double p with a < p <= b (a < b) halfway between them in the order
+   *  of doubles, so 64 halvings separate any two. */
+  private def between(a: Double, b: Double): Double = {
+    def key(d: Double) = { val x = java.lang.Double.doubleToLongBits(d); x ^ ((x >> 63) & Long.MaxValue) }
+    val (ka, kb) = (key(a), key(b))
+    val k = ka + ((kb - ka - 1) >>> 1) + 1
+    java.lang.Double.longBitsToDouble(k ^ ((k >> 63) & Long.MaxValue))
+  }
+
+  /** Frees a localCheckpoint's blocks now instead of at the next GC. */
+  private def release(checkpointed: DataFrame): Unit =
+    checkpointed.queryExecution.logical.foreach {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
 
   /**
    * Exact-count sample selected by a DETERMINISTIC hex rank (the n
@@ -138,10 +269,10 @@ object Sampler {
    * `QUALIFY row_number() OVER (ORDER BY md5(...)) <= n`, which is what
    * lets a full sample->join pipeline be hash-oracle-checked end-to-end.
    *
-   * Same selection as [[exactN]]: a ScaSRS threshold on the rank's 52-bit
-   * numeric prefix cuts ~n + O(sqrt n) candidates in one scan, and an
-   * O(sqrt n)-key cutoff picks the exact n smallest — no driver row
-   * funnel, no sort of the table.
+   * Same selection as [[exactN]]: ScaSRS thresholds on the rank's 52-bit
+   * numeric prefix cut ~n + O(sqrt n) candidates in one scan, and a cut
+   * over their O(sqrt n) wait-list keys picks the exact n smallest — no
+   * driver row funnel, no sort of the table.
    *
    * @param rank a LOWERCASE-HEX string column (md5-style), uniform in its
    *             leading bits; ties (hash collisions) are broken by
@@ -156,7 +287,7 @@ object Sampler {
     // numeric prefix: first 13 hex chars = 52 bits, exact in a double
     val u = conv(substring(col(RCOL), 1, 13), 16, 10).cast(DoubleType) /
       lit((1L << 52).toDouble)
-    smallestN(df.withColumn(RCOL, rank), u, n, total)
+    smallestN(df, rank, n, total, u).sample
   }
 
   /**

@@ -69,14 +69,59 @@ class SamplerSpec extends SparkSpec {
   test("constant rank: all ties, too few threshold candidates -> still exactly n rows") {
     // every key ties on the rank, so only the position tie-break separates
     // them. n = 50: lit(0.99) sits above the threshold, the first scan
-    // keeps nothing and the fallback reruns over every row. n = total - 10:
-    // the threshold is 1, and the cut drops the 10 largest keys.
+    // keeps nothing and the rescan takes every row. n = total - 10: the
+    // upper threshold is 1, and every row waits for the cut.
     for (n <- Seq(50L, total - 10)) {
       val got = Sampler.exactN(li, n, 42L, rankCol = Some(lit(0.99)))
       assert(got.count() === n, s"n=$n")
       assert(got.schema === li.schema)
       assert(got.intersectAll(li).count() === n, s"n=$n: not a sub-multiset")
     }
+  }
+
+  // a 53-bit hash of the id mapped to U[0,1): uniform and, in practice, distinct
+  private def hashRank(seed: Long) =
+    shiftrightunsigned(xxhash64(lit(seed), col("id")), 11).cast("double") / lit((1L << 53).toDouble)
+
+  test("many partitions: only the wait-list reaches the cut, and the driver gets at most its keys") {
+    // 200 partitions of ~53 candidates each. A cut over all ~10.6k
+    // candidates would let every partition send all of its keys.
+    val total = 1000000L
+    val n = 10000L
+    val df = spark.range(0, total, 1, 200).toDF("id")
+    val s = Sampler.smallestN(df, hashRank(3L), n, total)
+    // Meng's thresholds at 1e-8 leave (hi - lo) * total ~ 1220 rows waiting
+    assert(s.waitList > 0 && s.waitList < 1500, s"wait-list ${s.waitList}")
+    assert(s.keysToDriver <= s.waitList)
+    assert(s.accepted > n - s.waitList && s.accepted <= n)
+    val want = df.orderBy(hashRank(3L)).limit(n.toInt).as[Long].collect().toSet
+    assert(s.sample.as[Long].collect().toSet === want)
+  }
+
+  test("a rank that is NULL on most rows still gives the n smallest ranks") {
+    // 1 row in 10 has a rank, so the first threshold keeps ~n/10 rows and
+    // the rescan's thresholds come from the rank density that scan saw
+    val df = spark.range(0, 100000, 1, 8).toDF("id")
+    val rank = when(col("id") % 10 === 0, hashRank(5L))
+    val want = df.orderBy(rank.asc_nulls_last).limit(1000).as[Long].collect().toSet
+    assert(Sampler.exactN(df, 1000, 0L, rankCol = Some(rank)).as[Long].collect().toSet === want)
+  }
+
+  test("a wait-list over the 2^16-key budget: bisection narrows a skewed one; ties cut by position") {
+    val df = spark.range(0, 200000, 1, 8).toDF("id")
+    val n = 1000L
+    // u^8 piles the ranks near 0: about 100k fall below the lower
+    // threshold, so all ~105k candidates wait and bisection must narrow them
+    val skewed = pow(hashRank(11L), 8.0)
+    val s = Sampler.smallestN(df, skewed, n, 200000L)
+    assert(s.waitList <= (1L << 16) && s.keysToDriver <= s.waitList)
+    val want = df.orderBy(skewed).limit(n.toInt).as[Long].collect().toSet
+    assert(s.sample.as[Long].collect().toSet === want)
+    // one rank value on 70k rows: the first n rows by position, one key to
+    // the driver
+    val tie = Sampler.smallestN(spark.range(0, 70000, 1, 8).toDF("id"), lit(0.5), n, 70000L)
+    assert(tie.keysToDriver === 1)
+    assert(tie.sample.as[Long].collect().toSet === (0L until n).toSet)
   }
 
   test("the sample keeps the input's rows per partition: 8 files -> 1% in 1, 50% in 4") {
