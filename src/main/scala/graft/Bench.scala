@@ -1,29 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warm up the JVM/codegen/scan paths so the first timed query doesn't
-    // absorb session startup (a fixed cluster cost, not query cost)
-    try {
-      spark.range(1000000).selectExpr("sum(id)").collect()
-      spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-      // streaming engine init (state store providers, sink registry) is a
-      // similar fixed cost — warm it on the tiniest SF so the first timed
-      // streaming query measures the query, not the machinery
-      if (new java.io.File("/root/testdata/sf0.001").isDirectory)
-        SparkEntry.queries("q83_stream_sample")(spark, "/root/testdata/sf0.001").count()
-    } catch { case _: Throwable => () }
+    val spark = GraftSession.build("graft-bench", GraftSession.cpus)
+    GraftSession.warm(spark, sfDir)
     // Min-of-N passes per query: a shared host can steal cores mid-run and
     // uniformly inflate sub-second queries 4-5x (observed round 2). The min
     // across passes is the contention-robust statistic — it reflects what the

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ext.{CorpusFilters, Dedup, EventAnalytics, Multimodal, Similarity}
@@ -29,16 +29,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val work = args.headOption.getOrElse("/tmp/graft_scale")
     val src = "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-scaleprobe", GraftSession.cpus)
 
     def copyOf(base: DataFrame, i: Int, keyCols: Seq[String], offset: Long): DataFrame =
       keyCols.foldLeft(base)((df, kc) => df.withColumn(kc, col(kc) + lit(i * offset)))

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,17 +7,7 @@ object Verify {
     val sfDir = args(0); val outDir = args(1)
     // optional trailing args: run only these queries (debug aid)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS) which Spark has no native
-      // type for; read as long nanos (queries convert explicitly)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-verify", GraftSession.cpus)
     new java.io.File(outDir).mkdirs()
     // selectors are FULL query names: a typo'd selector silently ran ZERO
     // queries (and the checker passed vacuously on the empty manifest) —

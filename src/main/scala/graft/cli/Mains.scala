@@ -4,6 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import graft.io.ParquetIO
 import graft.operators.{Sampler, SemiJoinReducer}
 
@@ -51,21 +52,11 @@ object ProgressListener {
   }
 }
 
+/** The CLI binaries default to every core, not Bench's 4. */
 private[cli] object CliSession {
-  def build(app: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .appName(app)
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+  def build(app: String): SparkSession = GraftSession.build(app,
+    if (sys.env.contains("SPARK_GRAFT_CPUS")) GraftSession.cpus
+    else Runtime.getRuntime.availableProcessors())
 }
 
 /**

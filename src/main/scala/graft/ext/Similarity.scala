@@ -78,8 +78,7 @@ object Similarity {
       seed: Long = 42L,
       trainFraction: Double = -1.0,
       maxTrainRows: Long = 100000L,
-      maxIter: Int = 10,
-      initMode: String = "random")
+      maxIter: Int = 10)
 
   /**
    * IVF (inverted-file) approximate top-k: a KMeans coarse quantizer
@@ -103,8 +102,7 @@ object Similarity {
    */
   private def fitQuantizer(
       data: DataFrame, vecCol: String, k: Int, seed: Long,
-      trainFraction: Double, maxTrainRows: Long, maxIter: Int,
-      initMode: String) = {
+      trainFraction: Double, maxTrainRows: Long, maxIter: Int) = {
     val frac =
       if (trainFraction >= 0.0) math.min(trainFraction, 1.0)
       else {
@@ -117,11 +115,10 @@ object Similarity {
     // KMeansLocal = driver-side Lloyd over the COLLECTED sample (bounded
     // by maxTrainRows at any corpus scale): one collect job instead of
     // one cluster job per training iteration (guide §1.2 — measured at
-    // ~90 sample-sized jobs per IVF-PQ build). Falls back to the
-    // distributed loop for non-"random" init modes.
+    // ~90 sample-sized jobs per IVF-PQ build).
     org.apache.spark.ml.graft.KMeansLocal.fit(
       trainSrc.select(array_to_vector(col(vecCol)).as("features")),
-      k, seed, maxIter, initMode)
+      k, seed, maxIter)
   }
 
   /**
@@ -159,7 +156,7 @@ object Similarity {
       cfg: IvfConfig = IvfConfig()): IvfIndex = {
     val spark = data.sparkSession
     val model = fitQuantizer(data, dataVec, cfg.nlist, cfg.seed,
-      cfg.trainFraction, cfg.maxTrainRows, cfg.maxIter, cfg.initMode)
+      cfg.trainFraction, cfg.maxTrainRows, cfg.maxIter)
     val assigned = model.transform(
         data.select(col(dataId).as("neighbor_id"), col(dataVec).as("__dv"),
           array_to_vector(col(dataVec)).as("features")))
@@ -223,8 +220,7 @@ object Similarity {
       seed: Long = 42L,
       trainFraction: Double = -1.0,
       maxTrainRows: Long = 100000L,
-      maxIter: Int = 10,
-      initMode: String = "random")
+      maxIter: Int = 10)
 
   /**
    * SemDeDup-style semantic dedup (Abbas et al. 2023, arXiv:2303.09540):
@@ -249,7 +245,7 @@ object Similarity {
       data: DataFrame, idCol: String, vecCol: String,
       cfg: SemDedupConfig = SemDedupConfig()): DataFrame = {
     val model = fitQuantizer(data, vecCol, cfg.nlist, cfg.seed,
-      cfg.trainFraction, cfg.maxTrainRows, cfg.maxIter, cfg.initMode)
+      cfg.trainFraction, cfg.maxTrainRows, cfg.maxIter)
     // the assignment feeds THREE consumers (both self-join sides + the
     // kept-flag join) — localCheckpoint materializes it once (same pattern
     // as duplicateClusters); unlike persist(), the blocks are freed by the

@@ -1057,7 +1057,7 @@ class TxLogOps(store0: LogStore, val checkpointInterval: Int = 10,
     * leaves an unreferenced segment dir that no manifest ever points to —
     * exactly the orphan the lost-claim drop / vacuum path already
     * reclaims. Measured 0.145 → 0.096 s per small segment write, a fixed
-    * cost every commit pays (ProbeWrite, guide §6). */
+    * cost every commit pays (commit 484782f, guide §6). */
   private def segmentWriter(df: DataFrame) = df.write
     .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
     .option("mapreduce.fileoutputcommitter.algorithm.version", "2")

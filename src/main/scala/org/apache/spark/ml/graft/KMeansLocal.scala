@@ -37,12 +37,8 @@ object KMeansLocal {
 
   private val Tol = 1e-4
 
-  /** Fit on the collected rows of `df`'s `features` vector column.
-    * Falls back to [[KMeansDirect]] for init modes other than "random"
-    * (no engine path uses them with a local-sized train set today). */
-  def fit(df: DataFrame, k: Int, seed: Long, maxIter: Int,
-      initMode: String): KMeansModel = {
-    if (initMode != "random") return KMeansDirect.fit(df, k, seed, maxIter, initMode)
+  /** Fit on the collected rows of `df`'s `features` vector column. */
+  def fit(df: DataFrame, k: Int, seed: Long, maxIter: Int): KMeansModel = {
     val points: Array[Array[Double]] = df.select("features").collect()
       .map(_.getAs[Vector](0).toArray)
     val centers = run(points, k, seed, maxIter)

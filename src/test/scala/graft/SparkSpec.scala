@@ -5,14 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (getOrCreate dedups across suites). */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.build("graft-test", 4)
 
   lazy val sf0001 = "/root/testdata/sf0.001"
 }

@@ -43,7 +43,7 @@ class KMeansLocalSpec extends SparkSpec {
       .map { case (p, i) => (i.toLong, p.map(_.toFloat).toSeq) }
     val df = rows.toDF("id", "v")
       .select(col("id"), array_to_vector(col("v")).as("features"))
-    val model = KMeansLocal.fit(df.select("features"), 2, 42L, 10, "random")
+    val model = KMeansLocal.fit(df.select("features"), 2, 42L, 10)
     assert(model.clusterCenters.length == 2)
     val pred = model.transform(df).select("id", "prediction").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
