@@ -1,6 +1,9 @@
 package graft
 
+import java.util.concurrent.{ConcurrentHashMap, LinkedBlockingQueue, TimeUnit}
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 
@@ -11,8 +14,9 @@ import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkLis
   * its critical-path wall (the union of those intervals: concurrent jobs
   * count once) and the driver-only time outside all of them; per call site
   * it reports summed job time, where overlapping jobs each count in full.
-  * Explain mode prints each query's formatted physical plan. Dev tool —
-  * never part of the bench or the gate.
+  * Explain mode prints each query's formatted physical plan and how many
+  * Spark jobs ran while its DataFrame was built. Dev tool — never part of
+  * the bench or the gate.
   *
   *   runMain graft.JobProfile <sfDir> <queryName>[,<queryName>...] [passes]
   *   runMain graft.JobProfile explain <sfDir> <queryName>[,<queryName>...]...
@@ -44,14 +48,69 @@ object JobProfile {
       sys.exit(2)
   }
 
+  /** Prints each query's formatted plan and the Spark jobs that ran while
+    * its DataFrame was built. Eager work (a sampler's selection, a
+    * follower's materialized batch) runs then and is absent from the plan,
+    * which shows only a scan of its materialized result. */
   private def explain(sfDir: String, names: Seq[String]): Unit = {
     val spark = GraftSession.build("graft-explain", GraftSession.cpus)
     names.foreach { name =>
       println(s"===== $name =====")
-      println(SparkEntry.queries(name)(spark, sfDir).queryExecution
-        .explainString(ExplainMode.fromString("formatted")))
+      val (df, eager) = jobsOf(spark)(SparkEntry.queries(name)(spark, sfDir))
+      println(s"eager jobs while building the DataFrame: ${eager.size}")
+      eager.groupBy(identity).toSeq.sortBy(_._1).foreach { case (site, js) =>
+        println(f"${js.size}%4d  $site")
+      }
+      println(df.queryExecution.explainString(ExplainMode.fromString("formatted")))
     }
     spark.stop()
+  }
+
+  private val MarkProperty = "graft.jobprofile.marker"
+
+  /** Runs `body` and returns its result with the Spark jobs it started,
+    * each named by its SQL execution's description, else by its last
+    * stage. Job ids count up in submission order and a listener sees job
+    * starts in that order, so two marker jobs bracket the body's jobs
+    * once the second marker's start has arrived (awaited for at most
+    * 30 s). Every job the context runs in between counts: run nothing
+    * else on it meanwhile. */
+  def jobsOf[T](spark: SparkSession)(body: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
+    val starts = new LinkedBlockingQueue[(Int, Option[String], String)]()
+    val sqlNames = new ConcurrentHashMap[String, String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        val name = prop("spark.sql.execution.root.id").orElse(prop("spark.sql.execution.id"))
+          .flatMap(x => Option(sqlNames.get(x)))
+          .getOrElse(e.stageInfos.lastOption.map(_.name).getOrElse("?"))
+        starts.add((e.jobId, prop(MarkProperty), name))
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => sqlNames.put(s.executionId.toString, s.description)
+        case _ => ()
+      }
+    }
+    def mark(m: String): Unit = {
+      sc.setLocalProperty(MarkProperty, m)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(MarkProperty, null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      mark("start")
+      val out = body
+      mark("end")
+      val seen = scala.collection.mutable.ArrayBuffer[(Int, Option[String], String)]()
+      while (!seen.exists(_._2.contains("end"))) {
+        val s = starts.poll(30, TimeUnit.SECONDS)
+        require(s != null, "jobsOf: no job-start event within 30 s")
+        seen += s
+      }
+      def markId(m: String) = seen.collectFirst { case (id, Some(`m`), _) => id }.get
+      val (lo, hi) = (markId("start"), markId("end"))
+      (out, seen.filter(j => j._1 > lo && j._1 < hi).sortBy(_._1).map(_._3).toSeq)
+    } finally sc.removeSparkListener(listener)
   }
 
   private def profile(sfDir: String, names: Seq[String], passes: Int): Unit = {

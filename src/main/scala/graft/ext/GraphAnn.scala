@@ -359,7 +359,14 @@ object GraphAnn {
    * delete-list at serve time).
    */
   def hnswInsert(index: DataFrame, newData: DataFrame, idCol: String, vecCol: String,
-      cfg: HnswConfig = HnswConfig()): DataFrame = {
+      cfg: HnswConfig = HnswConfig()): DataFrame =
+    hnswInsert(index, newData, idCol, vecCol, cfg,
+      touchedShards(newData, idCol, cfg.shards))
+
+  /** [[hnswInsert]] for a caller that already knows `touched`, the exact
+    * set of shards the batch routes into: no job to find them. */
+  private[ext] def hnswInsert(index: DataFrame, newData: DataFrame, idCol: String,
+      vecCol: String, cfg: HnswConfig, touched: Set[Int]): DataFrame = {
     val tag = cfgTag(cfg)
     val batch = newData
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
@@ -372,7 +379,6 @@ object GraphAnn {
     // narrow filter — never repartitioned, never re-emitted by a task.
     // Shards are independent graphs, so the output is row-identical to
     // the unscoped form.
-    val touched = touchedShards(newData, idCol, cfg.shards)
     val idxAll = index.select(col("shard"), col("id"), col("vec"), col("levels"), col("cfg"))
     if (touched.isEmpty) return idxAll // empty batch
     val hotIdx =

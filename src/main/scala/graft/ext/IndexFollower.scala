@@ -1,8 +1,12 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.spark.SparkContext
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointBlocks
 import org.apache.spark.sql.types._
 
 import graft.io.TxLog
@@ -32,7 +36,20 @@ import graft.io.TxLog
  *
  * Per advance, the source's classified change feed collapses to each
  * key's FINAL state in the range (latest `_commit_version`, postimage
- * beating preimage on the tie), then:
+ * beating preimage on the tie). The collapsed batch is SHARED: every
+ * follower of a source (HNSW, IVF-PQ, MinHash, any consumer id) advances
+ * over the same range `(lastV, srcLatest]` after the same commits, so the
+ * first to advance reads and collapses the range once, with all source
+ * columns, and materializes it; the others select their id and value
+ * columns from the same blocks. The memo holds one batch per source path,
+ * keyed by the range, the id column, the identity of every manifest the
+ * range reads (version, timestamp, segments, deletion-vector dirs) and
+ * the SparkContext; a key that differs (another range, or a source
+ * dropped and re-created at the same path) or blocks that are gone
+ * recompute. Each follower then decides in one pass over the batch and
+ * its state: HNSW in one tagged semi-join against the node ids and one
+ * per-shard aggregate, IVF-PQ and MinHash in one tombstone pass
+ * (IVF-PQ adds one collect of its codebook and meta rows). For HNSW:
  *
  *   - fresh inserts → [[GraphAnn.hnswInsert]] over ONLY the shards the
  *     batch hash-routes into (adopt-and-insert; the accumulated graph
@@ -47,7 +64,9 @@ import graft.io.TxLog
  *     carries verbatim in the state manifest
  *
  * 100 TB shape: per advance the feed read is touched-volume-sized (the
- * CDF of a copy-on-write rewrite reads only rewritten segments), the
+ * CDF of a copy-on-write rewrite reads only rewritten segments) and paid
+ * once per range however many followers ride the source (the memo keeps
+ * one touched-volume-sized batch per source, never more), the
  * insert routes only the batch through one shuffle, graph rows never
  * leave their shard, and the STATE WRITE is touched-shards-sized — the
  * state table is shard-aligned (one segment per shard), so untouched
@@ -114,11 +133,56 @@ object IndexFollower {
   def tombstonesOf(state: DataFrame): DataFrame =
     state.filter(col("kind") === "tomb").select(col("id")).distinct()
 
+  /** What a collapsed batch was computed from: the range, the id column
+    * it collapses on, the identity of every manifest the range's change
+    * feed reads (a source dropped and re-created at the same path has the
+    * same versions but other timestamps and segment names), and the
+    * context whose blocks hold it. */
+  private final case class BatchKey(from: Long, to: Long, idCol: String,
+      manifests: Seq[(Long, Long, Seq[String], Set[String])], sc: SparkContext)
+
+  /** The newest collapsed batch of each source path: one entry per source,
+    * replaced by the next range anyone advances over. An evicted batch's
+    * blocks go when the ContextCleaner sees its frame unreachable, as
+    * every other `localCheckpoint` of an advance does. */
+  private val batches = new ConcurrentHashMap[String, (BatchKey, DataFrame)]()
+
+  /** Every follower of one source advances over the same range
+    * `(lastV, srcLatest]` after the same commits, so the range is read
+    * and collapsed once, with ALL source columns, and the other followers
+    * select their id and value columns from the same materialized blocks.
+    * A key that does not match, or blocks that are gone, recompute. */
+  private def collapsedBatch(spark: SparkSession, src: String, lastV: Long,
+      srcLatest: Long, idCol: String): DataFrame = {
+    val key = BatchKey(lastV, srcLatest, idCol,
+      TxLog.snapshots(src, lastV, srcLatest)
+        .map(s => (s.version, s.ts, s.segments, s.dvs.keySet)),
+      spark.sparkContext)
+    Option(batches.get(src)).collect {
+      case (k, fin) if k == key && CheckpointBlocks.intact(fin) => fin
+    }.getOrElse {
+      val id = col(idCol).cast("long")
+      val w = Window.partitionBy(id)
+        .orderBy(col("_commit_version").desc, col("__alive").desc)
+      val fin = TxLog.changeFeed(spark, src, lastV, srcLatest)
+        .withColumn("__alive",
+          when(col("_change_type").isin("insert", "update_postimage"), 1).otherwise(0))
+        .withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1)
+        .drop("__rn", "_commit_version", "_change_type")
+        .localCheckpoint()
+      batches.put(src, (key, fin))
+      fin
+    }
+  }
+
   /** Collapse a source range to each id's FINAL state — the shared
     * follower discipline: latest `_commit_version` wins, the postimage
     * beats the preimage on the within-commit tie. Returns (inserts with
     * the value column, deleted ids); the bootstrap range (lastV < 0) folds
-    * the full snapshot at `srcLatest` as inserts. */
+    * the full snapshot at `srcLatest` as inserts. Both frames read the
+    * materialized [[collapsedBatch]], so no downstream pass re-runs the
+    * change-feed read or the window collapse. */
   private def finalChanges(spark: SparkSession, src: String, lastV: Long,
       srcLatest: Long, idCol: String, valCol: String, valName: String)
       : (DataFrame, DataFrame) =
@@ -127,23 +191,10 @@ object IndexFollower {
         .select(col(idCol).cast("long").as("id"), col(valCol).as(valName))
       (ins, ins.select(col("id")).limit(0))
     } else {
-      val feed = TxLog.changeFeed(spark, src, lastV, srcLatest)
-      val changes = feed.select(col(idCol).cast("long").as("id"),
-        col(valCol).as(valName),
-        when(col("_change_type").isin("insert", "update_postimage"), 1)
-          .otherwise(0).as("alive"),
-        col("_commit_version").as("cv"))
-      val w = Window.partitionBy(col("id"))
-        .orderBy(col("cv").desc, col("alive").desc)
-      // materialize the collapsed batch ONCE (touched-volume-sized): both
-      // returned branches and every downstream pass (stats, tombstones,
-      // encode/build) would otherwise re-run the change-feed read + window
-      // collapse per action (r11)
-      val fin = changes.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn", "cv")
-        .localCheckpoint()
-      (fin.filter(col("alive") === 1).drop("alive"),
-        fin.filter(col("alive") === 0).select(col("id")))
+      val fin = collapsedBatch(spark, src, lastV, srcLatest, idCol)
+      val id = col(idCol).cast("long").as("id")
+      (fin.filter(col("__alive") === 1).select(id, col(valCol).as(valName)),
+        fin.filter(col("__alive") === 0).select(id))
     }
 
   private def nodeRows(index: DataFrame): DataFrame =
@@ -247,30 +298,25 @@ object IndexFollower {
       } else {
         val state = curState()
         val nodes = nodesOf(state)
-        val tombs = tombstonesOf(state)
+        // the tomb rows as stored: every consumer below either dedups
+        // (countDistinct, tombAll) or does not care (the anti-join)
+        val tombs = state.filter(col("kind") === "tomb").select(col("id"))
         // finalChanges materializes the collapsed batch (localCheckpoint),
         // so every pass below reads the touched-volume-sized blocks
         val (ins, delRaw) =
           finalChanges(spark, src, lastV, srcLatest, idCol, vecCol, "vec")
         val sOf = GraphAnn.shardOfExpr(col("id"), cfg.shards)
-        val batchShards = ins.select(sOf.as("__s")).distinct()
-          .collect().map(_.getInt(0)).toSet
-        // ids being re-inserted (updates) — the graph cannot re-point
-        // them. The probe semi-joins only the BATCH's shards' node ids
-        // (shard-aligned segments row-group-skip the rest)
-        val updProbe =
-          if (batchShards.isEmpty) nodes.limit(0)
-          else nodes.filter(col("shard").isin(batchShards.toSeq.map(Int.box): _*))
-        // updates and live deletes are both batch ⋉ graph semi-joins —
-        // ONE tagged materialization instead of two (r12, guide §2.4)
+        // ids being re-inserted (updates: the graph cannot re-point them)
+        // and live deletes, as ONE tagged semi-join of the batch against
+        // the node ids. The collapsed batch holds each id once, so the
+        // tags never collide.
         val hits = ins.select(col("id"), lit(1).as("__alive"))
-            .join(updProbe.select(col("id")), Seq("id"), "left_semi")
-          .unionByName(delRaw.select(col("id"), lit(0).as("__alive"))
-            .join(nodes.select(col("id")), Seq("id"), "left_semi"))
+          .unionByName(delRaw.select(col("id"), lit(0).as("__alive")))
+          .join(nodes.select(col("id")), Seq("id"), "left_semi")
           .localCheckpoint()
         val updHit = hits.filter(col("__alive") === 1).select(col("id"))
         val delLive = hits.filter(col("__alive") === 0).select(col("id"))
-        val tombAll = tombs.unionByName(delLive.select(col("id"))).distinct()
+        val tombAll = tombs.unionByName(delLive).distinct()
         // segment layout: which base segments can carry VERBATIM
         val byKind = base.segments.map(sg => sg -> classify(base, sg))
         val migrating = byKind.exists(_._2 == LegacySeg)
@@ -290,26 +336,29 @@ object IndexFollower {
           else nodeSegsOf.map { case (s, segs) =>
             s -> segs.map(sg => base.rowCounts.getOrElse(sg, 0L)).sum
           }
-        // ONE touched-volume-sized aggregation for the remaining per-shard
-        // decision stats the old code ran as three separate actions
-        // (tombstone counts, update shards, delete-presence) — r11,
-        // guide §2.4. countDistinct(tomb ∪ del) per shard equals the old
-        // tombAll.distinct per-shard count (shard is a function of id).
-        val shardStats = tombs.select(col("id"), lit("tomb").as("__src"))
-          .unionByName(delLive.select(col("id"), lit("del").as("__src")))
-          .unionByName(updHit.select(col("id"), lit("upd").as("__src")))
+        // ONE touched-volume-sized aggregation answers every per-shard
+        // decision: tombstone counts, update shards, delete presence and
+        // the shards the inserts route into. countDistinct(tomb ∪ del) per
+        // shard equals tombAll's per-shard count (shard is a function of id).
+        def tagged(ids: DataFrame, src: String) =
+          ids.select(col("id"), lit(src).as("__src"))
+        val shardStats = tagged(tombs, "tomb")
+          .unionByName(tagged(delLive, "del"))
+          .unionByName(tagged(updHit, "upd"))
+          .unionByName(tagged(ins, "ins"))
           .select(sOf.as("__s"), col("id"), col("__src"))
           .groupBy(col("__s")).agg(
-            countDistinct(when(col("__src") =!= "upd", col("id"))).as("__ntomb"),
+            countDistinct(when(col("__src").isin("tomb", "del"), col("id"))).as("__ntomb"),
             sum(when(col("__src") === "upd", 1L).otherwise(0L)).as("__nupd"),
-            sum(when(col("__src") === "del", 1L).otherwise(0L)).as("__ndel"))
+            sum(when(col("__src") === "del", 1L).otherwise(0L)).as("__ndel"),
+            sum(when(col("__src") === "ins", 1L).otherwise(0L)).as("__nins"))
           .collect()
+        def shardsWith(i: Int) = shardStats.filter(_.getLong(i) > 0L).map(_.getInt(0)).toSet
         val tombCnt: Map[Int, Long] = shardStats
           .map(r => r.getInt(0) -> r.getLong(1)).filter(_._2 > 0L).toMap
-        val updShards = shardStats
-          .filter(_.getLong(2) > 0L).map(_.getInt(0)).toSet
+        val updShards = shardsWith(2)
         val delLiveNonEmpty = shardStats.exists(_.getLong(3) > 0L)
-        val insShards = batchShards
+        val insShards = shardsWith(4)
         val rebuildShards = updShards ++ tombCnt.collect {
           case (s, t) if nodeCnt.getOrElse(s, 0L) > 0 &&
             t.toDouble / nodeCnt(s).toDouble >= compactFrac => s
@@ -318,7 +367,7 @@ object IndexFollower {
         val presentShards = nodeCnt.keySet ++ insShards
         val reEmit: Set[Int] =
           if (migrating) presentShards else rebuildShards ++ insertShards
-        val deadIds = tombAll.unionByName(updHit.select(col("id"))).distinct()
+        val deadIds = tombs.unionByName(delLive).unionByName(updHit)
         // ONE build job for ALL touched shards (r12, guide §2.4/§2.6):
         // hnswBuild/hnswInsert already group by the id-hash shard in-task,
         // so feeding them the union of the touched shards' rows yields
@@ -342,7 +391,7 @@ object IndexFollower {
           if (insertShards.isEmpty) None
           else Some(nodeRows(GraphAnn.hnswInsert(
             nodes.filter(inShards(col("shard"), insertShards)),
-            ins.filter(inShards(sOf, insertShards)), "id", "vec", cfg)))
+            ins.filter(inShards(sOf, insertShards)), "id", "vec", cfg, insertShards)))
         // legacy dissolution: untouched shards' rows verbatim, aligned
         val passShards = reEmit -- rebuildShards -- insertShards
         val passed =
@@ -397,6 +446,54 @@ object IndexFollower {
       deleted = Some(tombstonesOf(state)))
   }
 
+  /** What an append-shaped advance (IVF-PQ, MinHash) decides from its
+    * state and its batch: `tombIds`, the changed ids the state already
+    * indexes (the advance's new tombstones, materialized), and the counts
+    * of tombstoned ids after the advance, of indexed ids and of inserts. */
+  private final case class TombstonePass(tombIds: DataFrame, nTomb: Long,
+      nIndexed: Long, nIns: Long)
+
+  private val PriorTomb = 1
+  private val Indexed = 2
+  private val Changed = 4
+  private val Inserted = 8
+
+  /** ONE shuffle and one materialization for the whole decision: the
+    * state's tomb and `indexedKind` ids and the batch's ids group by id
+    * into a bitmask of where the id occurs; each partition emits its new
+    * tombstone ids and then one row of its counts, so the counts come
+    * from a narrow collect of a few rows per partition. Only the
+    * touched-volume-sized tombstone ids are stored. */
+  private def tombstonePass(state: DataFrame, indexedKind: String,
+      ins: DataFrame, del: DataFrame): TombstonePass = {
+    val flags = state.filter(col("kind").isin("tomb", indexedKind))
+      .select(col("id"),
+        when(col("kind") === "tomb", PriorTomb).otherwise(Indexed).as("__f"))
+      .unionByName(ins.select(col("id"), lit(Changed | Inserted).as("__f")))
+      .unionByName(del.select(col("id"), lit(Changed).as("__f")))
+      .groupBy(col("id")).agg(bit_or(col("__f")).as("__f"))
+    val out = StructType(Seq("id", "__ntomb", "__nidx", "__nins")
+      .map(StructField(_, LongType)))
+    val passed = flags.mapPartitions { rows =>
+      val n = Array(0L, 0L, 0L)
+      val tombs = rows.flatMap { r =>
+        val f = r.getInt(1)
+        val isNew = (f & (Indexed | Changed)) == (Indexed | Changed)
+        if (isNew || (f & PriorTomb) != 0) n(0) += 1
+        if ((f & Indexed) != 0) n(1) += 1
+        if ((f & Inserted) != 0) n(2) += 1
+        if (isNew) Some(Row(r.getLong(0), null, null, null)) else None
+      }
+      // `++` takes its operand by name: the count row is built only once
+      // every tombstone row has been emitted and counted
+      tombs ++ Iterator.single(Row(null, n(0), n(1), n(2)))
+    }(Encoders.row(out)).localCheckpoint()
+    val counts = passed.filter(col("id").isNull).drop("id").collect()
+    def total(i: Int) = counts.map(_.getLong(i)).sum
+    TombstonePass(passed.filter(col("id").isNotNull).select(col("id")),
+      total(0), total(1), total(2))
+  }
+
   // ---- IVF-PQ index follower -----------------------------------------------
 
   private val pqStateSchema = StructType(Seq(
@@ -445,34 +542,46 @@ object IndexFollower {
     * (assigned/code) die under a later-generation tombstone, exactly the
     * MinHash discipline; centroid/codebook/meta rows belong to the NEWEST
     * build generation present. */
-  def ivfPqOf(state: DataFrame): (Similarity.IvfIndex, Similarity.PqIndex) = {
+  def ivfPqOf(state: DataFrame): (Similarity.IvfIndex, Similarity.PqIndex) =
+    ivfPqOf(state, pqBuildOf(state))
+
+  private def ivfPqOf(state: DataFrame, build: PqBuild)
+      : (Similarity.IvfIndex, Similarity.PqIndex) = {
     val tombs = state.filter(col("kind") === "tomb")
       .groupBy(col("id")).agg(max(col("gen")).as("__tgen"))
     def live(rows: DataFrame) = rows.join(tombs, Seq("id"), "left")
       .filter(col("__tgen").isNull || col("gen") >= col("__tgen"))
-    val buildGen = state.filter(col("kind") === "centroid")
-      .agg(max(col("gen"))).head().getLong(0)
     val assigned = live(state.filter(col("kind") === "assigned"))
       .select(col("id").as("neighbor_id"), col("vec").as("__dv"), col("cell"))
     val codes = live(state.filter(col("kind") === "code"))
       .select(col("id").as("neighbor_id"), col("code").as("pq_code"))
-    val cents = state.filter(col("kind") === "centroid" && col("gen") === buildGen)
+    val cents = state.filter(col("kind") === "centroid" && col("gen") === build.gen)
       .select(col("cell"), col("dvec").as("__cv"))
-    val cb = state.filter(col("kind") === "codebook" && col("gen") === buildGen)
-      .select(col("sub"), col("cidx"), col("dvec"))
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-    val m = cb.map(_._1).max + 1
-    val byS = cb.groupBy(_._1).map { case (j, rows) => j -> rows.sortBy(_._2).map(_._3) }
-    val centroids = (0 until m).map(byS(_)).toArray
-    (Similarity.IvfIndex(assigned, cents),
-      Similarity.PqIndex(codes, Similarity.PqCodebook(m, centroids(0)(0).length, centroids)))
+    (Similarity.IvfIndex(assigned, cents), Similarity.PqIndex(codes, build.codebook))
   }
 
-  /** The live-count baseline recorded by the newest full build. */
-  private def builtAtOf(state: DataFrame): Long = {
-    val r = state.filter(col("kind") === "meta")
-      .agg(max_by(col("id"), col("gen"))).head()
-    if (r.isNullAt(0)) 0L else r.getLong(0)
+  /** The newest full build of a followed IVF-PQ state: its generation,
+    * its PQ codebook and the live count it was built at (the
+    * retrain-growth baseline; 0 if no meta row). */
+  private final case class PqBuild(gen: Long, codebook: Similarity.PqCodebook, builtAt: Long)
+
+  /** One collect of the codebook and meta rows (m × ksub + 1 rows: a
+    * full build replaces every artifact row, so the state holds one build
+    * generation of them) answers all three. */
+  private def pqBuildOf(state: DataFrame): PqBuild = {
+    val rows = state.filter(col("kind").isin("codebook", "meta"))
+      .select(col("kind"), col("id"), col("sub"), col("cidx"), col("dvec"), col("gen"))
+      .collect()
+    val (cbRows, meta) = rows.partition(_.getString(0) == "codebook")
+    require(cbRows.nonEmpty, "followed IVF-PQ state holds no codebook rows")
+    val gen = cbRows.map(_.getLong(5)).max
+    val byS = cbRows.filter(_.getLong(5) == gen)
+      .map(r => (r.getInt(2), r.getInt(3), r.getSeq[Double](4).toArray))
+      .groupBy(_._1).map { case (j, rs) => j -> rs.sortBy(_._2).map(_._3) }
+    val m = byS.keys.max + 1
+    val centroids = (0 until m).map(byS(_)).toArray
+    PqBuild(gen, Similarity.PqCodebook(m, centroids(0)(0).length, centroids),
+      meta.maxByOption(_.getLong(5)).map(_.getLong(1)).getOrElse(0L))
   }
 
   /**
@@ -517,45 +626,21 @@ object IndexFollower {
       if (lastV < 0 || rebootNeeded(src, lastV, onFloorOverrun))
         (Some(fullBuild()), Seq.empty)
       else {
-        // finalChanges materializes the collapsed batch (localCheckpoint),
-        // so the stats pass, tombstone derivation and encode path all read
-        // the touched-volume-sized blocks (r11)
         val (ins, del) = finalChanges(spark, src, lastV, srcLatest, idCol, vecCol, "vec")
-        val indexedIds = state.filter(col("kind") === "assigned").select(col("id"))
-        // materialized once: feeds the decision aggregate AND the tombstone
-        // rows of the committed segment (r12 — was recomputed per consumer)
-        val tombIds = ins.select(col("id")).unionByName(del).distinct()
-          .join(indexedIds, Seq("id"), "left_semi").localCheckpoint()
-        // ONE aggregation action for the three rebuild-decision counts the
-        // old code ran as three separate jobs (each re-scanning the state):
-        // group the tagged union by (source, id), then count groups — the
-        // same values as {priorTombs ∪ tombIds}.distinct.count,
-        // indexedIds.distinct.count and ins.count (r11, guide §2.4)
-        val cnt = state.filter(col("kind") === "tomb").select(col("id"))
-          .withColumn("__src", lit("tomb"))
-          .unionByName(tombIds.withColumn("__src", lit("tomb")))
-          .unionByName(indexedIds.withColumn("__src", lit("idx")))
-          .unionByName(ins.select(col("id")).withColumn("__src", lit("ins")))
-          .groupBy(col("__src"), col("id")).agg(count(lit(1)).as("__n"))
-          .groupBy().agg(
-            sum(when(col("__src") === "tomb", 1L).otherwise(0L)).as("__ntomb"),
-            sum(when(col("__src") === "idx", 1L).otherwise(0L)).as("__nidx"),
-            sum(when(col("__src") === "ins", col("__n")).otherwise(0L)).as("__nins"))
-          .head()
-        val nTomb = if (cnt.isNullAt(0)) 0L else cnt.getLong(0)
-        val nIndexed = if (cnt.isNullAt(1)) 0L else cnt.getLong(1)
-        val liveAfter = nIndexed - nTomb + (if (cnt.isNullAt(2)) 0L else cnt.getLong(2))
-        val builtAt = builtAtOf(state)
+        val pass = tombstonePass(state, "assigned", ins, del)
+        val liveAfter = pass.nIndexed - pass.nTomb + pass.nIns
+        val build = pqBuildOf(state)
         val mustRebuild =
-          (nIndexed > 0 && nTomb.toDouble / nIndexed.toDouble >= compactFrac) ||
-          (builtAt > 0 && liveAfter.toDouble >= builtAt.toDouble * (1.0 + retrainGrowth))
+          (pass.nIndexed > 0 && pass.nTomb.toDouble / pass.nIndexed.toDouble >= compactFrac) ||
+          (build.builtAt > 0 &&
+            liveAfter.toDouble >= build.builtAt.toDouble * (1.0 + retrainGrowth))
         if (mustRebuild) (Some(fullBuild()), Seq.empty)
         else {
           // quantize ONLY the batch against the trained artifacts: feeding
           // ingestIvfPq empty assigned/codes makes its output exactly the
           // batch's fresh rows (and disarms its duplicate-id refusal —
           // updates are legal here, the tombstone retires the old rows)
-          val (ivf, pq) = ivfPqOf(state)
+          val (ivf, pq) = ivfPqOf(state, build)
           val (gIvf, gPq) = Similarity.ingestIvfPq(
             Similarity.IvfIndex(ivf.assigned.limit(0), ivf.centroids),
             Similarity.PqIndex(pq.codes.limit(0), pq.codebook),
@@ -564,7 +649,7 @@ object IndexFollower {
             // centroid/codebook rows re-emitting at the new gen would
             // shadow nothing but bloat the state: keep per-id rows only
             .filter(col("kind").isin("assigned", "code"))
-          val tombRows = tombIds.select(
+          val tombRows = pass.tombIds.select(
             lit("tomb").as("kind"), col("id"),
             lit(null).cast(IntegerType).as("cell"),
             lit(null).cast(ArrayType(FloatType)).as("vec"),
@@ -668,47 +753,28 @@ object IndexFollower {
       val reboot = rebootNeeded(src, lastV0, onFloorOverrun)
       val lastV = if (reboot) -1L else lastV0
       val state = if (reboot) emptyMhState(spark) else curState()
-      // finalChanges materializes the collapsed batch (localCheckpoint) —
-      // the signature build, tombstone derivation and compaction decision
-      // all read the touched-volume-sized blocks (r11)
       val (ins, del) = finalChanges(spark, src, lastV, srcLatest, idCol, textCol, "__text")
       val fresh = asMhState(Dedup.buildMinhashIndex(ins, "id", "__text", cfg),
         gen = srcLatest)
       // tombstone every changed id that the state has EVER indexed (a
       // brand-new id needs none); updates and deletes alike
-      val stateIds = state.filter(col("kind") === "base").select(col("id"))
-      // materialized once: feeds the compaction-decision aggregate AND the
-      // tombstone rows of the committed segment (r12)
-      val tombIds = ins.select(col("id")).unionByName(del).distinct()
-        .join(stateIds, Seq("id"), "left_semi").localCheckpoint()
-      val tombRows = tombIds
+      val pass = tombstonePass(state, "base", ins, del)
+      val tombRows = pass.tombIds
         .select(lit("tomb").as("kind"), col("id"),
           lit(null).cast(IntegerType).as("band"), lit(null).cast(LongType).as("bh"),
           lit(null).cast(ArrayType(LongType)).as("shh"),
           lit(null).cast(IntegerType).as("sz"), lit(srcLatest).as("gen"))
-      // ONE aggregation action for the two compaction-decision counts the
-      // old code ran as two jobs (r11, guide §2.4): group the tagged union
-      // by (source, id), count groups — same values as
-      // {priorTombs ∪ tombIds}.distinct.count and stateIds.distinct.count
-      val cnt = state.filter(col("kind") === "tomb").select(col("id"))
-        .withColumn("__src", lit("tomb"))
-        .unionByName(tombIds.withColumn("__src", lit("tomb")))
-        .unionByName(stateIds.withColumn("__src", lit("base")))
-        .groupBy(col("__src"), col("id")).agg(count(lit(1)).as("__n"))
-        .groupBy().agg(
-          sum(when(col("__src") === "tomb", 1L).otherwise(0L)).as("__ntomb"),
-          sum(when(col("__src") === "base", 1L).otherwise(0L)).as("__nbase"))
-        .head()
-      val nTombIds = if (cnt.isNullAt(0)) 0L else cnt.getLong(0)
-      val nIds = if (cnt.isNullAt(1)) 0L else cnt.getLong(1)
-      if (nIds > 0 && nTombIds.toDouble / nIds.toDouble >= compactFrac) {
+      if (pass.nIndexed > 0 && pass.nTomb.toDouble / pass.nIndexed.toDouble >= compactFrac) {
         // materialize: resolve the whole state once, retire every tombstone
         val resolved = asMhState(minhashIndexOf(
           state.unionByName(fresh).unionByName(tombRows)), gen = srcLatest)
         (Some(resolved), Seq.empty)
       } else
-        // append-shaped; a rebootstrap discards the stale state segments
-        (Some(fresh.unionByName(tombRows)), if (reboot) Seq.empty else base.segments)
+        // append-shaped; a bootstrap carries nothing: neither the empty
+        // segment `create` wrote (its all-optional footer would send every
+        // state read down the schema-merging path) nor, on a rebootstrap,
+        // the stale state
+        (Some(fresh.unionByName(tombRows)), if (lastV < 0) Seq.empty else base.segments)
     }
   }
 }

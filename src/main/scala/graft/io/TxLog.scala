@@ -515,6 +515,11 @@ class TxLogOps(store0: LogStore, val checkpointInterval: Int = 10,
   def history(table: String): Seq[Snapshot] =
     listVersions(table).map(snapshotOf(table, _))
 
+  /** The manifests of versions `from` to `to`, both inclusive: one parse
+    * each, no listing. */
+  private[graft] def snapshots(table: String, from: Long, to: Long): Seq[Snapshot] =
+    (from to to).map(snapshotOf(table, _))
+
   def latest(table: String): Snapshot = {
     val vs = listVersions(table)
     require(vs.nonEmpty, s"not a TxLog table (no _graft_log commits): $table")

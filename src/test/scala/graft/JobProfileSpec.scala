@@ -1,11 +1,10 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** JobProfile's critical-path wall is the union of job and SQL-execution
-  * intervals: concurrent jobs must count once, not summed. */
-class JobProfileSpec extends AnyFunSuite {
-  import JobProfile.covered
+  * intervals: concurrent jobs must count once, not summed. `jobsOf`
+  * counts exactly the jobs its body starts. */
+class JobProfileSpec extends SparkSpec {
+  import JobProfile.{covered, jobsOf}
 
   test("covered: empty input, and empty or inverted intervals, cover nothing") {
     assert(covered(Nil) == 0L)
@@ -24,5 +23,16 @@ class JobProfileSpec extends AnyFunSuite {
   test("covered: nested intervals add nothing to their container") {
     assert(covered(Seq((0L, 100L), (10L, 20L), (30L, 40L), (50L, 100L))) == 100L)
     assert(covered(Seq((10L, 20L), (0L, 100L), (200L, 210L))) == 110L)
+  }
+
+  test("jobsOf: exactly the body's jobs, SQL jobs named by their execution") {
+    val sc = spark.sparkContext
+    assert(jobsOf(spark)(42) === ((42, Nil)))
+    val (n, jobs) = jobsOf(spark) {
+      sc.parallelize(1 to 10, 2).count() + sc.parallelize(1 to 5, 1).count()
+    }
+    assert(n === 15L && jobs.size === 2, jobs)
+    val (_, sql) = jobsOf(spark)(spark.range(100).selectExpr("sum(id)").collect())
+    assert(sql.nonEmpty && sql.forall(_.startsWith("collect at")), sql)
   }
 }

@@ -2,6 +2,7 @@ package graft.ext
 
 import graft.SparkSpec
 import graft.io.TxLog
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Index-follows-table: the exactly-once HNSW follower over a TxLog
@@ -174,10 +175,13 @@ class IndexFollowerSpec extends SparkSpec {
     assert(pairs.contains((100L, 7L)))
     assert(!pairs.exists(_._2 == 5L), "erased corpus ids must not gate new documents")
     // below compactFrac every advance was APPEND-SHAPED: each version's
-    // segments are a superset of its parent's (no state row ever rewrote)
+    // segments holding rows are a superset of its parent's (no state row
+    // ever rewrote; the bootstrap drops only the zero-row segment `create`
+    // wrote)
     val h = TxLog.history(idx)
     assert(h.sliding(2).forall(w =>
-      w(0).segments.forall(w(1).segments.contains)),
+      w(0).segments.filterNot(sg => w(0).rowCounts.get(sg).contains(0L))
+        .forall(w(1).segments.contains)),
       s"advances must append, got ${h.map(_.segments.size)}")
     assert(TxLog.read(spark, idx).filter(col("kind") === "tomb").count() > 0)
     // a delete wave crossing compactFrac MATERIALIZES: tombstones retire,
@@ -324,5 +328,173 @@ class IndexFollowerSpec extends SparkSpec {
       val st = TxLog.read(spark, idx)
       assert(IndexFollower.nodesOf(st).count() === 90L)
     }
+  }
+
+  // ---- three followers of one source -------------------------------------
+
+  private val hnswCfg4 = cfg.copy(shards = 4)
+  private val ivfCfg = Similarity.IvfConfig(nlist = 8, nprobe = 8)
+  private val pqCfg = Similarity.PqConfig(m = 4, ksub = 16)
+  private val mhCfg = Dedup.MinHashConfig(numHashes = 64, bands = 16)
+
+  private def unit(v: Seq[Float]): Seq[Float] = {
+    val n = math.sqrt(v.map(x => x.toDouble * x).sum).toFloat
+    if (n == 0f) v else v.map(_ / n)
+  }
+
+  /** Documents with an embedding and a text; `salt` changes both. */
+  private def docs(ids: Seq[Long], salt: Long = 0L, ver: Long = 0L) =
+    ids.map(i => (i, unit(vecOf(i * 31L + salt)),
+      s"document $i salt $salt shared words alpha beta gamma delta token${i + salt}", ver))
+      .toDF("doc_id", "embedding", "text", "ver")
+
+  private def followAll(src: String, root: java.nio.file.Path, tag: String): Seq[Boolean] = Seq(
+    IndexFollower.followIndex(spark, src, root.resolve(s"hnsw$tag").toString, "ann",
+      "doc_id", "embedding", hnswCfg4),
+    IndexFollower.followIvfPq(spark, src, root.resolve(s"pq$tag").toString, "pq",
+      "doc_id", "embedding", ivfCfg, pqCfg),
+    IndexFollower.followMinhashIndex(spark, src, root.resolve(s"mh$tag").toString, "mh",
+      "doc_id", "text", mhCfg))
+
+  private def sameRows(a: DataFrame, b: DataFrame): Boolean =
+    a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+
+  /** Each followed state serves exactly the live source: HNSW nodes minus
+    * tombstones and the IVF-PQ assigned rows carry the live (id, vector)
+    * pairs, and the resolved MinHash index equals a fresh build. */
+  private def assertFollows(src: String, root: java.nio.file.Path, tag: String): Unit = {
+    val live = TxLog.read(spark, src)
+    val liveVecs = live.select(col("doc_id").as("id"), col("embedding").as("vec"))
+    val hs = TxLog.read(spark, root.resolve(s"hnsw$tag").toString)
+    val served = IndexFollower.nodesOf(hs).select(col("id"), col("vec"))
+      .join(IndexFollower.tombstonesOf(hs), Seq("id"), "left_anti")
+    assert(sameRows(served, liveVecs), "HNSW graph minus tombstones must equal the live vectors")
+    val (ivf, _) = IndexFollower.ivfPqOf(TxLog.read(spark, root.resolve(s"pq$tag").toString))
+    assert(sameRows(ivf.assigned.select(col("neighbor_id").as("id"), col("__dv").as("vec")),
+      liveVecs), "IVF-PQ assigned rows must equal the live vectors")
+    val mh = IndexFollower.minhashIndexOf(TxLog.read(spark, root.resolve(s"mh$tag").toString))
+    val fresh = Dedup.buildMinhashIndex(live, "doc_id", "text", mhCfg)
+    assert(sameRows(mh.bands, fresh.bands) && sameRows(mh.base, fresh.base),
+      "MinHash index must equal a fresh build over the live corpus")
+  }
+
+  test("three followers of one source share each range's batch; a re-created source gets a fresh one") {
+    val root = graft.io.TempDirs.create("idxf8_")
+    val src = root.resolve("src").toString
+    TxLog.create(spark, src, docs(0L until 120L))
+    assert(followAll(src, root, "") === Seq(true, true, true))
+    TxLog.append(spark, src, docs(120L until 140L))
+    assert(followAll(src, root, "") === Seq(true, true, true))
+    assertFollows(src, root, "")
+    TxLog.upsert(spark, src, docs(Seq(3L, 50L, 121L), salt = 7L, ver = 1L), Seq("doc_id"))
+    assert(followAll(src, root, "") === Seq(true, true, true))
+    assertFollows(src, root, "")
+    // a CDC batch: two updates (one of them twice, the later ver wins),
+    // one delete and one insert
+    val cdc = docs(Seq(10L), salt = 9L, ver = 2L)
+      .unionByName(docs(Seq(10L), salt = 11L, ver = 3L))
+      .unionByName(docs(Seq(60L, 200L), salt = 9L, ver = 3L)).withColumn("op", lit("U"))
+      .unionByName(docs(Seq(70L), ver = 3L).withColumn("op", lit("D")))
+    TxLog.applyChanges(spark, src, cdc, Seq("doc_id"), Seq(col("ver")), "op")
+    assert(followAll(src, root, "") === Seq(true, true, true))
+    assertFollows(src, root, "")
+    TxLog.deleteRows(spark, src, col("doc_id").isin(5L, 80L, 130L))
+    assert(followAll(src, root, "") === Seq(true, true, true))
+    assertFollows(src, root, "")
+    // the cached batch must also survive its blocks being dropped: the
+    // next follower over the same range recomputes instead of failing
+    TxLog.append(spark, src, docs(140L until 150L))
+    val held = spark.sparkContext.getPersistentRDDs.keySet
+    assert(IndexFollower.followIndex(spark, src, root.resolve("hnsw").toString, "ann",
+      "doc_id", "embedding", hnswCfg4))
+    spark.sparkContext.getPersistentRDDs.collect {
+      case (id, rdd) if !held.contains(id) => rdd.unpersist(blocking = true)
+    }
+    assert(followAll(src, root, "").drop(1) === Seq(true, true))
+    assertFollows(src, root, "")
+
+    // drop the source and re-create it at the same path with the same
+    // version count but other rows: a fresh follower must see the new
+    // rows, not the batch cached for the old range (0, 1]
+    val src1 = root.resolve("src1").toString
+    TxLog.create(spark, src1, docs(0L until 60L))
+    assert(followAll(src1, root, "_a") === Seq(true, true, true))
+    TxLog.append(spark, src1, docs(60L until 80L))
+    assert(followAll(src1, root, "_a") === Seq(true, true, true))
+    val p = java.nio.file.Paths.get(src1)
+    java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+      .forEach(f => java.nio.file.Files.delete(f))
+    TxLog.create(spark, src1, docs(0L until 60L, salt = 5L))
+    assert(followAll(src1, root, "_b") === Seq(true, true, true))
+    TxLog.append(spark, src1, docs(300L until 320L, salt = 5L))
+    assert(followAll(src1, root, "_b") === Seq(true, true, true))
+    assertFollows(src1, root, "_b")
+  }
+
+  test("jobs per non-bootstrap advance stay at their pinned bounds") {
+    val root = graft.io.TempDirs.create("idxf9_")
+    val src = root.resolve("src").toString
+    TxLog.create(spark, src, docs(0L until 200L))
+    followAll(src, root, "")
+    // the two rounds of a benchmark cycle: an append and a keyed erasure,
+    // then an upsert, a CDC batch and a predicate delete
+    val rounds: Seq[() => Unit] = Seq(
+      () => {
+        TxLog.append(spark, src, docs(200L until 220L))
+        TxLog.deleteRowsKeyed(spark, src, Seq(7L, 8L, 9L).toDF("doc_id"), Seq("doc_id"))
+      },
+      () => {
+        TxLog.upsert(spark, src, docs(Seq(11L, 99L, 150L), salt = 3L), Seq("doc_id"))
+        TxLog.applyChanges(spark, src,
+          docs(Seq(12L, 300L), salt = 4L).withColumn("op", lit("U"))
+            .unionByName(docs(Seq(13L)).withColumn("op", lit("D"))),
+          Seq("doc_id"), Seq(col("ver")), "op")
+        TxLog.deleteRows(spark, src, col("doc_id").isin(20L, 21L))
+      })
+    // bound = the jobs each advance runs on this fixture (HNSW 15 and 23,
+    // IVF-PQ 7, MinHash 6), plus a margin of 2. HNSW advances first and
+    // collapses the batch the other two reuse.
+    val bounds = Seq("hnsw" -> Seq(17, 25), "ivfpq" -> Seq(9, 9), "minhash" -> Seq(8, 8))
+    rounds.zipWithIndex.foreach { case (commit, r) =>
+      commit()
+      def jobsOf[T](body: => T) = graft.JobProfile.jobsOf(spark)(body)
+      val counts = Seq(
+        jobsOf(IndexFollower.followIndex(spark, src, root.resolve("hnsw").toString, "ann",
+          "doc_id", "embedding", hnswCfg4)),
+        jobsOf(IndexFollower.followIvfPq(spark, src, root.resolve("pq").toString, "pq",
+          "doc_id", "embedding", ivfCfg, pqCfg)),
+        jobsOf(IndexFollower.followMinhashIndex(spark, src, root.resolve("mh").toString, "mh",
+          "doc_id", "text", mhCfg)))
+      bounds.zip(counts).foreach { case ((kind, bs), (advanced, jobs)) =>
+        assert(advanced, s"$kind must advance in round $r")
+        assert(jobs.size <= bs(r), s"$kind advance in round $r ran ${jobs.size} jobs, " +
+          s"bound ${bs(r)}: ${jobs.mkString(", ")}")
+      }
+    }
+    assertFollows(src, root, "")
+  }
+
+  test("minhash state carries no zero-row segment and one footer schema") {
+    val root = graft.io.TempDirs.create("idxf10_")
+    val src = root.resolve("src").toString
+    val idx = root.resolve("mh").toString
+    TxLog.create(spark, src, docs(0L until 40L))
+    assert(IndexFollower.followMinhashIndex(spark, src, idx, "mh", "doc_id", "text", mhCfg))
+    TxLog.upsert(spark, src, docs(Seq(3L, 41L), salt = 2L), Seq("doc_id"))
+    assert(IndexFollower.followMinhashIndex(spark, src, idx, "mh", "doc_id", "text", mhCfg))
+    val snap = TxLog.latest(idx)
+    assert(snap.segments.size === 2)
+    assert(snap.segments.forall(sg => snap.rowCounts.get(sg).exists(_ > 0L)),
+      s"zero-row segment in ${snap.rowCounts}")
+    val conf = spark.sessionState.newHadoopConf()
+    val schemas = snap.segments.flatMap { sg =>
+      java.nio.file.Files.list(java.nio.file.Paths.get(idx, sg)).toArray.toSeq
+        .map(_.toString).filter(_.endsWith(".parquet"))
+        .map(f => org.apache.parquet.hadoop.ParquetFileReader.readFooter(conf,
+          new org.apache.hadoop.fs.Path(f),
+          org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+          .getFileMetaData.getSchema.toString)
+    }.distinct
+    assert(schemas.size === 1, s"segment footers differ: ${schemas.mkString("\n")}")
   }
 }
