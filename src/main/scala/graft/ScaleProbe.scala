@@ -35,7 +35,7 @@ object ScaleProbe {
       keyCols.foldLeft(base)((df, kc) => df.withColumn(kc, col(kc) + lit(i * offset)))
 
     def readBase(table: String): DataFrame = {
-      val df = spark.read.parquet(s"$src/$table.parquet")
+      val df = graft.io.ParquetIO.read(spark, s"$src/$table.parquet")
       // events.ts → long nanos regardless of the fixture's timestamp flavor
       if (table == "events") graft.io.ParquetIO.tsToNanos(df) else df
     }
@@ -90,7 +90,7 @@ object ScaleProbe {
             else df.withColumn("c_name", concat(col("c_name"), lit(s"@$i$i$i")))))
     )).flatten.toMap
 
-    def read(n: String, k: Int) = spark.read.parquet(paths((n, k)))
+    def read(n: String, k: Int) = graft.io.ParquetIO.read(spark, paths((n, k)))
 
     // optional probe-name filter: `runMain graft.ScaleProbe <workDir> n1 n2…`
     // re-times just the named probes (fixtures are cached, so a targeted
@@ -305,13 +305,13 @@ object ScaleProbe {
       timed("partitioned_write", k) {
         graft.io.ParquetIO.writePartitioned(read("documents", k),
           s"$work/part_x$k.parquet", Seq("lang"))
-        spark.read.parquet(s"$work/part_x$k.parquet").count()
+        graft.io.ParquetIO.read(spark, s"$work/part_x$k.parquet").count()
       }
       timed("zorder_rewrite", k) {
         val ev = read("events", k).select(col("event_id"), col("user_id"), col("value"))
         graft.io.ZOrder.writeZOrdered(ev, s"$work/zorder_x$k.parquet",
           "user_id", "value", numFiles = 8)
-        spark.read.parquet(s"$work/zorder_x$k.parquet").count()
+        graft.io.ParquetIO.read(spark, s"$work/zorder_x$k.parquet").count()
       }
       // r6: hilbert layout rewrite — same cost shape as zorder (one range
       // repartition + local sort), key is a per-row codegen transform
@@ -319,7 +319,7 @@ object ScaleProbe {
         val ev = read("events", k).select(col("event_id"), col("user_id"), col("value"))
         graft.io.HilbertOrder.writeHilbertOrdered(ev, s"$work/hilbert_x$k.parquet",
           Seq("user_id", "value"), numFiles = 8)
-        spark.read.parquet(s"$work/hilbert_x$k.parquet").count()
+        graft.io.ParquetIO.read(spark, s"$work/hilbert_x$k.parquet").count()
       }
       timed("asof_join", k) {
         val e = read("events", k)
@@ -1042,7 +1042,7 @@ object ScaleProbe {
           Seq("l_returnflag", "l_linestatus"),
           Seq("qty" -> col("l_quantity").cast("decimal(15,2)")))
         timed("rollup_rewrite", k) {
-          spark.read.parquet(factP).groupBy(col("l_returnflag"))
+          graft.io.ParquetIO.read(spark, factP).groupBy(col("l_returnflag"))
             .agg(sum(col("l_quantity").cast("decimal(15,2)")).as("s")).count()
         }
         org.apache.spark.sql.graft.MaterializedRollup.unregister(factP)

@@ -27,10 +27,7 @@ import graft.streaming.StreamGate
 object SparkEntry {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    // readStable: the test fixtures are read-only, so their schema is
-    // registered once per JVM (catalog discipline) instead of re-inferred
-    // as a distributed footer job on every read of every pass (guide §1.2)
-    val df = graft.io.ParquetIO.readStable(s, s"$dir/$name.parquet")
+    val df = graft.io.ParquetIO.read(s, s"$dir/$name.parquet")
     // events.ts → long epoch nanos regardless of the fixture's parquet
     // timestamp flavor (see ParquetIO.tsToNanos); all event-time queries
     // do integer nanos arithmetic on it
@@ -670,7 +667,7 @@ object SparkEntry {
       val ev = t(s, dir, "events").select(col("event_id"), col("user_id"), col("value"))
       val out = graft.io.TempDirs.create("graft_zorder_gate").toString
       graft.io.ZOrder.writeZOrdered(ev, out, "user_id", "value", numFiles = 4)
-      s.read.parquet(out)
+      graft.io.ParquetIO.read(s, out)
         .filter(col("user_id") <= 18 && col("value") <= 60.0)
         .groupBy((col("user_id") % 4).as("user_mod"))
         .agg(count(lit(1)).as("n_rows"),
@@ -929,7 +926,7 @@ object SparkEntry {
         .parquet(s"$tmp/fragmented")
       graft.io.ParquetIO.compact(s, s"$tmp/fragmented", s"$tmp/compacted",
         targetFileBytes = 512L << 20)
-      s.read.parquet(s"$tmp/compacted")
+      graft.io.ParquetIO.read(s, s"$tmp/compacted")
         .select(col("doc_id"), md5(col("text").cast("binary")).as("text_md5"),
           col("lang"), col("source"), col("n_chars"))
     }),
@@ -1100,7 +1097,7 @@ object SparkEntry {
     "q114_partitioned_scan" -> ((s, dir) => {
       val out = graft.io.TempDirs.create("graft_part").toString
       graft.io.ParquetIO.writePartitioned(t(s, dir, "documents"), out, Seq("lang"))
-      s.read.parquet(out).filter(col("lang") === "en")
+      graft.io.ParquetIO.read(s, out).filter(col("lang") === "en")
         .select(col("doc_id"), col("text"), col("source"), col("n_chars"), col("lang"))
     }),
     // canonical pre-dedup normalization chain (lower / strip non-letters /
@@ -1358,7 +1355,7 @@ object SparkEntry {
       val out = graft.io.TempDirs.create("graft_hilbert_gate").toString
       graft.io.HilbertOrder.writeHilbertOrdered(ev, out, Seq("user_id", "value"),
         numFiles = 4)
-      s.read.parquet(out)
+      graft.io.ParquetIO.read(s, out)
         .filter(col("user_id") <= 12 && col("value") <= 45.0)
         .groupBy((col("user_id") % 3).as("user_mod"))
         .agg(count(lit(1)).as("n_rows"),
@@ -2974,7 +2971,7 @@ object SparkEntry {
     "q288_rollup_rewrite" -> ((s, dir) => {
       import org.apache.spark.sql.graft.MaterializedRollup
       val base = ensureServeArtifact("rollupfact", dir, "lineitem") { p =>
-        graft.io.ParquetIO.readStable(s, s"$dir/lineitem.parquet")
+        graft.io.ParquetIO.read(s, s"$dir/lineitem.parquet")
           .select(col("l_returnflag"), col("l_linestatus"),
             col("l_quantity"), col("l_extendedprice"))
           .write.parquet(s"$p/fact")
@@ -2982,7 +2979,7 @@ object SparkEntry {
       MaterializedRollup.create(s, s"$base/fact", s"$base/rollup",
         Seq("l_returnflag", "l_linestatus"),
         Seq("qty" -> dec("l_quantity"), "price" -> dec("l_extendedprice")))
-      graft.io.ParquetIO.readStable(s, s"$base/fact")
+      graft.io.ParquetIO.read(s, s"$base/fact")
         .filter(col("l_linestatus") === lit("F"))
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n_rows"),
@@ -3070,7 +3067,7 @@ object SparkEntry {
       val base = ensureServeArtifact("hnsw_v2", dir, "embeddings") { p =>
         GraphAnn.hnswBuild(e, "vec_id", "embedding", cfg).write.parquet(s"$p/graph")
       }
-      val approx = GraphAnn.hnswQuery(graft.io.ParquetIO.readStable(s, s"$base/graph"),
+      val approx = GraphAnn.hnswQuery(graft.io.ParquetIO.read(s, s"$base/graph"),
         q, "vec_id", "embedding", k = 10, cfg)
       val brute = Similarity.bruteTopK(e, "vec_id", "embedding", q, "vec_id", "embedding", k = 10)
       val hits = approx.join(brute.select(col("query_id"), col("neighbor_id")),
@@ -3844,15 +3841,15 @@ object SparkEntry {
         require(q.awaitTermination(300000), "graft_txlog stream did not drain")
       }
       drain() // snapshot@v1 + (1,3] + (3,4]
-      val afterFirst = s.read.parquet(out).count()
+      val afterFirst = graft.io.ParquetIO.read(s, out).count()
       (5 to 6).foreach(i =>
         TxLog.append(s, src, src0.filter(col("o_orderkey") % 7 === i)))      // v5..v6
       drain() // resume: only (4, 6]
       drain() // caught up: nothing
-      val total = s.read.parquet(out).count()
+      val total = graft.io.ParquetIO.read(s, out).count()
       val resumeOk = afterFirst == src0.filter(col("o_orderkey") % 7 <= 4).count() &&
         total == src0.count()
-      s.read.parquet(out).groupBy(col("o_orderpriority"))
+      graft.io.ParquetIO.read(s, out).groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n_orders"), sum(col("cents")).as("sum_cents"))
         .withColumn("resume_ok", lit(resumeOk))
     }),

@@ -368,8 +368,8 @@ object Dedup {
   /** Rehydrate a [[MinhashIndex]] written by [[MinhashIndex.save]]. */
   def loadMinhashIndex(spark: org.apache.spark.sql.SparkSession, dir: String): MinhashIndex =
     MinhashIndex(
-      bands = spark.read.parquet(s"$dir/bands.parquet"),
-      base = spark.read.parquet(s"$dir/base.parquet"))
+      bands = graft.io.ParquetIO.read(spark, s"$dir/bands.parquet"),
+      base = graft.io.ParquetIO.read(spark, s"$dir/base.parquet"))
 
   /**
    * Near-dup pairs between an ingest batch and an indexed corpus:

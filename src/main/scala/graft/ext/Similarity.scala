@@ -140,8 +140,8 @@ object Similarity {
   /** Rehydrate an [[IvfIndex]] written by [[IvfIndex.save]]. */
   def loadIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String): IvfIndex =
     IvfIndex(
-      assigned = spark.read.parquet(s"$dir/assigned.parquet"),
-      centroids = spark.read.parquet(s"$dir/centroids.parquet"))
+      assigned = graft.io.ParquetIO.read(spark, s"$dir/assigned.parquet"),
+      centroids = graft.io.ParquetIO.read(spark, s"$dir/centroids.parquet"))
 
   /**
    * Build the IVF index: fit the capped-sample coarse quantizer, assign
@@ -360,14 +360,14 @@ object Similarity {
 
   /** Rehydrate a [[PqIndex]] written by [[PqIndex.save]]. */
   def loadPqIndex(spark: org.apache.spark.sql.SparkSession, dir: String): PqIndex = {
-    val cb = spark.read.parquet(s"$dir/codebook.parquet")
+    val cb = graft.io.ParquetIO.read(spark, s"$dir/codebook.parquet")
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
     val m = cb.map(_._1).max + 1
     val byS = cb.groupBy(_._1).map { case (j, rows) =>
       j -> rows.sortBy(_._2).map(_._3)
     }
     val centroids = (0 until m).map(byS(_)).toArray
-    PqIndex(spark.read.parquet(s"$dir/codes.parquet"),
+    PqIndex(graft.io.ParquetIO.read(spark, s"$dir/codes.parquet"),
       PqCodebook(m, centroids(0)(0).length, centroids))
   }
 

@@ -45,9 +45,9 @@ object VectorOps {
   }
 
   def loadSqIndex(spark: org.apache.spark.sql.SparkSession, dir: String): SqIndex = {
-    val bounds = spark.read.parquet(s"$dir/bounds.parquet")
+    val bounds = graft.io.ParquetIO.read(spark, s"$dir/bounds.parquet")
       .collect().sortBy(_.getAs[Int]("dim"))
-    SqIndex(spark.read.parquet(s"$dir/codes.parquet"),
+    SqIndex(graft.io.ParquetIO.read(spark, s"$dir/codes.parquet"),
       bounds.map(_.getAs[Double]("lo")), bounds.map(_.getAs[Double]("hi")))
   }
 

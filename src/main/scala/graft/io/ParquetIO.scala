@@ -5,12 +5,12 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 
 /**
  * Parquet source/sink.
  *
- * Reference behavior being re-expressed (see /root/reference):
+ * Reference behavior being re-expressed:
  *  - scan: `SerializedFileReader::get_row_iter` full/projected scan
  *    (src/bin/sample.rs:27-28,59; src/bin/join.rs:42-56,105). Spark's
  *    vectorized Parquet reader plus Catalyst column pruning / predicate
@@ -22,44 +22,38 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *    materialization) and all Spark SQL types round-trip (timestamp, date,
  *    decimal, array, map, struct, binary).
  *
+ * Reading: [[read]] takes the schema from ONE footer, read on the driver
+ * ([[FooterSchemaParquetFormat]]): `_common_metadata`, else `_metadata`,
+ * else the first data file by path, picked from the listing Spark makes
+ * for the scan anyway. No Spark job runs and the input is listed once, at
+ * any scale. Spark's own inference (a job) still runs when `mergeSchema`
+ * is on, when the listing is empty, or when that footer fails to read.
+ *
+ * Writing: every path-addressed write goes through [[writer]], which
+ * swaps `file://` for [[NoForkLocalFileSystem]] so Hadoop sets each new
+ * file's and directory's permissions in-process instead of forking
+ * `chmod`. Hadoop caches one `FileSystem` per scheme JVM-wide, keyed
+ * without the conf, so the writer also disables that cache for `file://`;
+ * otherwise the swap would never take effect. Other schemes are untouched.
+ *
  * `singleFile = true` reproduces the reference's one-file output layout for
  * CLI parity on small data; at 100 TB it must stay false (one task would
  * write everything).
  */
 object ParquetIO {
 
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+  /** Scan one or more parquet paths; the schema costs one driver-side
+    * footer read, no job (see the object doc). */
+  def read(spark: SparkSession, paths: String*): DataFrame =
+    spark.read.format(classOf[FooterSchemaParquetFormat].getName).load(paths: _*)
 
-  /** Schema cache for IMMUTABLE parquet paths (the catalog discipline).
-    *
-    * A schema-less `spark.read.parquet` runs footer schema inference as a
-    * DISTRIBUTED job on every call (`mergeSchemasInParallel` — even for a
-    * single file), a fixed per-read cost every query pays again on every
-    * pass. Production tables register their schema once in a catalog and
-    * never pay it; this cache is that registration for the path-addressed
-    * tables the engine reads. METADATA ONLY — the data itself is re-listed
-    * and re-scanned on every action (no results, no row counts, no file
-    * lists are cached), so every bench/oracle invocation still computes
-    * from the parquet inputs; a cold JVM's first read still infers.
-    * Sound only for paths whose FILES never change once first read (the
-    * read-only test fixtures, staged serve fixtures); mutable locations
-    * must keep using plain reads. */
-  private val stableSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-
-  /** Read an immutable parquet path with its schema cached per JVM: first
-    * read infers (one footer job), every later read passes the schema
-    * explicitly and skips the inference job entirely. */
-  def readStable(spark: SparkSession, path: String): DataFrame = {
-    val cached = stableSchemaCache.get(path)
-    if (cached != null) spark.read.schema(cached).parquet(path)
-    else {
-      val df = spark.read.parquet(path)
-      stableSchemaCache.put(path, df.schema)
-      df
-    }
-  }
+  /** `df.write` with permissions set in-process on `file://` (see the
+    * object doc): the one writer of graft's path-addressed parquet output.
+    * Not for `saveAsTable`, which would persist the options as table
+    * properties. */
+  private[graft] def writer(df: DataFrame): DataFrameWriter[Row] = df.write
+    .option("fs.file.impl", classOf[NoForkLocalFileSystem].getName)
+    .option("fs.file.impl.disable.cache", "true")
 
   /**
    * Normalize an event-time column to the engine contract: LONG EPOCH
@@ -105,8 +99,7 @@ object ParquetIO {
       singleFile: Boolean = false,
       compression: Option[String] = None,
       rowGroupBytes: Option[Long] = None): Unit = {
-    val out = if (singleFile) df.coalesce(1) else df
-    val w = out.write.mode("overwrite")
+    val w = writer(if (singleFile) df.coalesce(1) else df).mode("overwrite")
     compression.foreach(c => w.option("compression", c))
     rowGroupBytes.foreach(b => w.option("parquet.block.size", b.toString))
     w.parquet(path)
@@ -305,7 +298,7 @@ object ParquetIO {
     import org.apache.spark.sql.functions.col
     val keep = prunedFiles(spark, path, column, lo, hi)
     require(keep.nonEmpty, s"no candidate files for $column in [$lo, $hi]")
-    spark.read.parquet(keep: _*)
+    read(spark, keep: _*)
       .filter(col(column) >= lo && col(column) <= hi)
   }
 
@@ -344,9 +337,8 @@ object ParquetIO {
     require(files.nonEmpty, s"no parquet files under $inPath")
     val totalBytes = files.map(_.getLen).sum
     val nOut = math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
-    val df = spark.read.parquet(inPath)
-    val out = if (balanced) df.repartition(nOut) else df.coalesce(nOut)
-    val w = out.write.mode("overwrite")
+    val df = read(spark, inPath)
+    val w = writer(if (balanced) df.repartition(nOut) else df.coalesce(nOut)).mode("overwrite")
     compression.foreach(c => w.option("compression", c))
     w.parquet(outPath)
     val after = fs.listStatus(new Path(outPath)).count(f =>
@@ -370,7 +362,7 @@ object ParquetIO {
       partitionCols: Seq[String],
       compression: Option[String] = None): Unit = {
     require(partitionCols.nonEmpty, "partitionCols must not be empty")
-    val w = df.write.mode("overwrite").partitionBy(partitionCols: _*)
+    val w = writer(df).mode("overwrite").partitionBy(partitionCols: _*)
     compression.foreach(c => w.option("compression", c))
     w.parquet(path)
   }

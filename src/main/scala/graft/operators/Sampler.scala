@@ -489,7 +489,7 @@ object Sampler {
   def exactFromParquet(spark: SparkSession, path: String, ratio: Double, seed: Long): DataFrame = {
     require(ratio >= 0.0 && ratio <= 1.0,
       s"ratio must be in [0,1], got $ratio (the reference would loop forever for ratio>1)")
-    val df = spark.read.parquet(path)
+    val df = graft.io.ParquetIO.read(spark, path)
     val total = df.count()
     val n = (total * ratio).toLong
     // positionalRank reads df's hidden _metadata column; the output keeps

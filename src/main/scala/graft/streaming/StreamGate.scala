@@ -38,7 +38,7 @@ object StreamGate {
     normalizedEvents.computeIfAbsent(sfDir, { _ =>
       val spark = SparkSession.active
       val tmp = graft.io.TempDirs.create("graft_events_norm")
-      graft.io.ParquetIO.tsToNanos(graft.io.ParquetIO.readStable(spark, s"$sfDir/events.parquet"))
+      graft.io.ParquetIO.tsToNanos(graft.io.ParquetIO.read(spark, s"$sfDir/events.parquet"))
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val listing = Files.list(tmp)
       try listing.filter(_.toString.endsWith(".parquet")).findFirst().get()
@@ -124,7 +124,7 @@ object StreamGate {
    */
   def corpusFilter(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = stageTableDir(sfDir, "documents")
-    val schema = graft.io.ParquetIO.readStable(spark, s"$sfDir/documents.parquet").schema
+    val schema = graft.io.ParquetIO.read(spark, s"$sfDir/documents.parquet").schema
     val docs = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
       .parquet(dir.toString)
     val scored = graft.ext.TextStats.qualityScore(
@@ -145,7 +145,7 @@ object StreamGate {
    */
   def hashSplitRoute(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = stageTableDir(sfDir, "documents")
-    val schema = graft.io.ParquetIO.readStable(spark, s"$sfDir/documents.parquet").schema
+    val schema = graft.io.ParquetIO.read(spark, s"$sfDir/documents.parquet").schema
     val docs = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
       .parquet(dir.toString)
     val routed = graft.ext.CorpusFilters.hashSplit(docs, "doc_id",
@@ -167,7 +167,7 @@ object StreamGate {
    */
   def topKPerGroup(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = stageTableDir(sfDir, "documents")
-    val schema = graft.io.ParquetIO.readStable(spark, s"$sfDir/documents.parquet").schema
+    val schema = graft.io.ParquetIO.read(spark, s"$sfDir/documents.parquet").schema
     val docs = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
       .parquet(dir.toString)
     val ranked = docs.groupBy(col("lang"), col("source"))
@@ -265,13 +265,13 @@ object StreamGate {
    */
   def ingestFilter(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = stageTableDir(sfDir, "documents")
-    val schema = graft.io.ParquetIO.readStable(spark, s"$sfDir/documents.parquet").schema
+    val schema = graft.io.ParquetIO.read(spark, s"$sfDir/documents.parquet").schema
     val batchDocs = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
       .parquet(dir.toString)
       .filter(col("doc_id") % 10 === 0)
       .select(col("doc_id"),
         graft.ext.Dedup.contentFingerprint(col("text")).as("__fp"))
-    val corpusFps = graft.io.ParquetIO.readStable(spark, s"$sfDir/documents.parquet")
+    val corpusFps = graft.io.ParquetIO.read(spark, s"$sfDir/documents.parquet")
       .filter(col("doc_id") % 10 =!= 0)
       .select(graft.ext.Dedup.contentFingerprint(col("text")).as("__fp"))
       .distinct()
@@ -296,9 +296,9 @@ object StreamGate {
    */
   def nearDupGate(spark: SparkSession, sfDir: String, threshold: Double = 0.8): DataFrame = {
     import graft.ext.Dedup
-    val schema = graft.io.ParquetIO.readStable(spark, s"$sfDir/documents.parquet").schema
+    val schema = graft.io.ParquetIO.read(spark, s"$sfDir/documents.parquet").schema
     val dir = stageTableDir(sfDir, "documents")
-    val corpus = graft.io.ParquetIO.readStable(spark, s"$sfDir/documents.parquet")
+    val corpus = graft.io.ParquetIO.read(spark, s"$sfDir/documents.parquet")
     val idx = Dedup.buildMinhashIndex(corpus, "doc_id", "text")
     // admission mix: every 7th doc resubmitted under a new id (must be
     // rejected as an exact/near dup) alongside genuinely novel docs
@@ -324,7 +324,7 @@ object StreamGate {
       q.stop()
       throw new IllegalStateException("near-dup gate drain did not finish within 300s")
     }
-    spark.read.parquet(out)
+    graft.io.ParquetIO.read(spark, out)
   }
 
   /** Stream-stream interval join (see [[StreamOps.clickBeforePurchaseJoin]]);
@@ -434,7 +434,7 @@ object StreamGate {
   private def stageTableDirSplit(sfDir: String, table: String, parts: Int): Path =
     splitDirCache.computeIfAbsent((sfDir, table, parts), { _ =>
       val dir = graft.io.TempDirs.create(s"graft_stream_$table")
-      graft.io.ParquetIO.readStable(SparkSession.active, s"$sfDir/$table.parquet")
+      graft.io.ParquetIO.read(SparkSession.active, s"$sfDir/$table.parquet")
         .repartition(parts).write.mode("overwrite").parquet(dir.toString)
       dir
     })
@@ -460,7 +460,7 @@ object StreamGate {
    */
   def privacyGate(spark: SparkSession, sfDir: String, k: Int = 8): DataFrame = {
     val dir = stageTableDir(sfDir, "customer")
-    val batch = graft.io.ParquetIO.readStable(spark, s"$sfDir/customer.parquet")
+    val batch = graft.io.ParquetIO.read(spark, s"$sfDir/customer.parquet")
     val violating = batch.groupBy(col("c_nationkey"), col("c_mktsegment"))
       .agg(count(lit(1)).as("__n")).filter(col("__n") < k)
       .select(col("c_nationkey").as("__vn"), col("c_mktsegment").as("__vs"))
@@ -478,7 +478,7 @@ object StreamGate {
 
   def cdcSnapshot(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = stageTableDirSplit(sfDir, "orders", parts = 3)
-    val schema = graft.io.ParquetIO.readStable(spark, s"$sfDir/orders.parquet").schema
+    val schema = graft.io.ParquetIO.read(spark, s"$sfDir/orders.parquet").schema
     val orders = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
       .parquet(dir.toString)
     val changes = orders.select(col("o_custkey"),
@@ -545,7 +545,7 @@ object StreamGate {
   def giniMonitor(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = stageTableDirSplit(sfDir, "documents", parts = 3)
     val docs = spark.readStream
-      .schema(graft.io.ParquetIO.readStable(spark, s"$sfDir/documents.parquet").schema)
+      .schema(graft.io.ParquetIO.read(spark, s"$sfDir/documents.parquet").schema)
       .option("maxFilesPerTrigger", 1) // one file per micro-batch: state
       .parquet(dir.toString)           // genuinely merges ACROSS batches
     val cells = docs.groupBy(col("source"), col("lang"))
@@ -572,7 +572,7 @@ object StreamGate {
   def olsMonitor(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = stageTableDirSplit(sfDir, "lineitem", parts = 3)
     val li = spark.readStream
-      .schema(graft.io.ParquetIO.readStable(spark, s"$sfDir/lineitem.parquet").schema)
+      .schema(graft.io.ParquetIO.read(spark, s"$sfDir/lineitem.parquet").schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(dir.toString)
     runToTable(
@@ -594,11 +594,11 @@ object StreamGate {
   def txlogStreamSink(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.io.TxLog
     val dir = stageTableDirSplit(sfDir, "documents", parts = 3)
-    val schema = graft.io.ParquetIO.readStable(spark, s"$sfDir/documents.parquet").schema
+    val schema = graft.io.ParquetIO.read(spark, s"$sfDir/documents.parquet").schema
     val docs = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
       .parquet(dir.toString)
     val tbl = graft.io.TempDirs.create("graft_txlog_sink_").resolve("t").toString
-    TxLog.create(spark, tbl, graft.io.ParquetIO.readStable(spark, s"$sfDir/documents.parquet").limit(0))
+    TxLog.create(spark, tbl, graft.io.ParquetIO.read(spark, s"$sfDir/documents.parquet").limit(0))
     val q = docs.writeStream
       .foreachBatch(TxLog.streamSink(tbl, "docs"))
       .option("checkpointLocation",
@@ -610,7 +610,7 @@ object StreamGate {
     }
     // restart scenario: batch 0 re-delivered — must be skipped, not re-applied
     val replaySkipped = !TxLog.appendStreamBatch(spark, tbl,
-      graft.io.ParquetIO.readStable(spark, s"$sfDir/documents.parquet").limit(5), "docs", batchId = 0L)
+      graft.io.ParquetIO.read(spark, s"$sfDir/documents.parquet").limit(5), "docs", batchId = 0L)
     TxLog.read(spark, tbl)
       .groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
       .withColumn("n_commits", lit(TxLog.history(tbl).length.toLong))
@@ -632,7 +632,7 @@ object StreamGate {
   def lakehouseCapstone(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.io.TxLog
     val dir = stageTableDirSplit(sfDir, "documents", parts = 3)
-    val raw = graft.io.ParquetIO.readStable(spark, s"$sfDir/documents.parquet")
+    val raw = graft.io.ParquetIO.read(spark, s"$sfDir/documents.parquet")
     def slim(df: DataFrame) = df.select(col("doc_id"), col("source"),
       length(col("text")).cast("long").as("text_len"))
     val docsTbl = graft.io.TempDirs.create("graft_lakehouse_docs_").resolve("t").toString

@@ -31,7 +31,7 @@ object StreamOps {
   /** Batch read of an events parquet with `ts` normalized to long nanos —
     * the batch-equivalence counterpart of a staged stream. */
   def batchEvents(spark: SparkSession, path: String): DataFrame =
-    graft.io.ParquetIO.tsToNanos(graft.io.ParquetIO.readStable(spark, path))
+    graft.io.ParquetIO.tsToNanos(graft.io.ParquetIO.read(spark, path))
 
   /** File-based streaming read of an events directory (one file per
     * micro-batch by default — `maxFilesPerTrigger` tunes replay pace). */

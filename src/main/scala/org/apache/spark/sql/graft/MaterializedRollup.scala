@@ -93,7 +93,7 @@ object MaterializedRollup {
     require(dims.nonEmpty, "rollup needs at least one dimension")
     val names = measures.map(_._1)
     require(names.distinct.size == names.size, s"duplicate measure names in $names")
-    val fact = spark.read.parquet(factPath)
+    val fact = _root_.graft.io.ParquetIO.read(spark, factPath)
     val aggs = Seq(count(lit(1)).as("__cnt")) ++ measures.flatMap { case (n, c) =>
       Seq(sum(c).as(s"__sum_$n"), min(c).as(s"__min_$n"), max(c).as(s"__max_$n"))
     }
@@ -185,7 +185,7 @@ case class RollupRewrite(session: classic.SparkSession) extends Rule[LogicalPlan
       org.apache.spark.sql.catalyst.expressions.And(_, _))
 
     // fresh analyzed scan of the rollup table (fresh exprIds per rewrite)
-    val rollupPlan = session.read.parquet(spec.rollupPath)
+    val rollupPlan = _root_.graft.io.ParquetIO.read(session, spec.rollupPath)
       .queryExecution.analyzed
     val byName = rollupPlan.output.map(a => a.name -> a).toMap
 

@@ -1,11 +1,13 @@
 package graft.io
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.sql.{Date, Timestamp}
 
-import org.apache.spark.sql.Row
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
-import graft.SparkSpec
+import graft.{JobProfile, SparkSpec}
 
 class ParquetIOSpec extends SparkSpec {
 
@@ -261,5 +263,190 @@ class ParquetIOSpec extends SparkSpec {
     assert(spark.table("g_orphan_t").collect().map(_.getLong(0)).sorted
       === Array(10L, 11L, 12L))
     spark.sql("DROP TABLE g_orphan_t")
+  }
+
+  // ---- reading: the schema from one driver-side footer ----
+
+  private def fixtureTables: Seq[String] =
+    Files.list(Paths.get(sf0001)).iterator().asScala.map(_.toString)
+      .filter(_.endsWith(".parquet")).toSeq.sorted
+
+  /** A Spark-written three-file directory (with `_SUCCESS` and `.crc`
+    * files) and a `writePartitioned` directory. */
+  private lazy val writtenDirs: Seq[String] = {
+    import org.apache.spark.sql.functions.col
+    val root = Files.createTempDirectory("graft_schema")
+    val rows = spark.range(0, 300, 1, 3).select(col("id"),
+      (col("id") % 3).cast("int").as("g"), col("id").cast("string").as("s"))
+    val multi = root.resolve("multi").toString
+    rows.write.parquet(multi)
+    val names = new java.io.File(multi).list().toSeq
+    assert(names.contains("_SUCCESS") && names.exists(_.endsWith(".crc")) &&
+      names.count(_.endsWith(".parquet")) == 3)
+    val parted = root.resolve("parted").toString
+    ParquetIO.writePartitioned(rows, parted, Seq("g"))
+    Seq(multi, parted)
+  }
+
+  /** A directory of two single files with different columns:
+    * `part-a.parquet` (x, y) sorts before `part-b.parquet` (x, z). */
+  private lazy val driftDir: String = {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_drift")
+    def put(df: DataFrame, name: String): Unit = {
+      val tmp = Files.createTempDirectory("graft_drift_src").resolve("t").toString
+      df.coalesce(1).write.parquet(tmp)
+      val part = new java.io.File(tmp).listFiles().find(_.getName.endsWith(".parquet")).get
+      Files.copy(part.toPath, dir.resolve(name), StandardCopyOption.REPLACE_EXISTING)
+    }
+    put(Seq((1L, "a")).toDF("x", "y"), "part-a.parquet")
+    put(Seq((2L, 2.5)).toDF("x", "z"), "part-b.parquet")
+    dir.toString
+  }
+
+  test("read: building the DataFrame and taking its schema runs no Spark job") {
+    for (p <- fixtureTables ++ writtenDirs :+ driftDir) {
+      val (_, jobs) = JobProfile.jobsOf(spark)(ParquetIO.read(spark, p).schema)
+      assert(jobs.isEmpty, s"$p: $jobs")
+    }
+    // what this saves: Spark's own inference reads the same footer in a job
+    val (_, plain) = JobProfile.jobsOf(spark)(spark.read.parquet(fixtureTables.head).schema)
+    assert(plain.nonEmpty)
+  }
+
+  test("read: the schema equals spark.read.parquet's on every input shape") {
+    val tables = fixtureTables
+    assert(tables.exists(_.endsWith("/events.parquet")) &&
+      tables.exists(_.endsWith("/embeddings.parquet")))
+    for (p <- tables ++ writtenDirs :+ driftDir)
+      assert(ParquetIO.read(spark, p).schema === spark.read.parquet(p).schema, p)
+    // multi-path reads take the same single file Spark does
+    assert(ParquetIO.read(spark, tables.take(2): _*).schema ===
+      spark.read.parquet(tables.take(2): _*).schema)
+    // the fixtures' footers carry no Spark schema, so the converter decided
+    // every type above, `events.ts` and `embeddings.embedding` included
+    val conf = spark.sessionState.newHadoopConf()
+    for (p <- tables)
+      assert(!org.apache.parquet.hadoop.ParquetFileReader.readFooter(conf,
+        new org.apache.hadoop.fs.Path(p), org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
+        .getFileMetaData.getKeyValueMetaData.containsKey("org.apache.spark.sql.parquet.row.metadata"), p)
+  }
+
+  test("read: without mergeSchema the first file by path decides; with it, Spark merges") {
+    assert(ParquetIO.read(spark, driftDir).schema.fieldNames.toSeq === Seq("x", "y"))
+    val merged = spark.read.format(classOf[FooterSchemaParquetFormat].getName)
+      .option("mergeSchema", "true").load(driftDir).schema
+    assert(merged === spark.read.option("mergeSchema", "true").parquet(driftDir).schema)
+    assert(merged.fieldNames.toSeq === Seq("x", "y", "z"))
+  }
+
+  test("read: an empty directory or an unreadable footer fails as Spark's read does") {
+    def failure(body: => Any): Throwable =
+      intercept[Throwable] { body; () }
+    val empty = Files.createTempDirectory("graft_empty").toString
+    val a = failure(ParquetIO.read(spark, empty))
+    val b = failure(spark.read.parquet(empty))
+    assert(a.getClass === b.getClass)
+    assert(a.getMessage === b.getMessage)
+    val bad = Files.createTempDirectory("graft_bad")
+    Files.writeString(bad.resolve("part-0.parquet"), "not a parquet file")
+    val c = failure(ParquetIO.read(spark, bad.toString).schema)
+    val d = failure(spark.read.parquet(bad.toString).schema)
+    assert(c.getClass === d.getClass)
+  }
+
+  // ---- writing: permissions set in-process ----
+
+  /** The command lines of the processes JFR sees start while `body` runs,
+    * except on Spark's heartbeat thread: it runs `getconf` once per JVM,
+    * whenever its first beat falls. */
+  private def processStarts(body: => Unit): Seq[String] = {
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try body finally rec.stop()
+    val f = Files.createTempFile("graft_jfr", ".jfr")
+    try {
+      rec.dump(f)
+      jdk.jfr.consumer.RecordingFile.readAllEvents(f).asScala.toSeq
+        .filter(_.getEventType.getName == "jdk.ProcessStart")
+        .filterNot(e => Option(e.getThread).exists(_.getJavaName == "driver-heartbeater"))
+        .map(_.getString("command"))
+    } finally { rec.close(); Files.deleteIfExists(f) }
+  }
+
+  /** Every file and directory under `root` with its POSIX permissions,
+    * keyed by its relative path with the write's UUIDs masked. */
+  private def modes(root: String): Map[String, String] = {
+    val r = Paths.get(root)
+    val s = Files.walk(r)
+    try s.iterator().asScala.map { (p: Path) =>
+      r.relativize(p).toString.replaceAll("[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "U") ->
+        java.nio.file.attribute.PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+    }.toMap finally s.close()
+  }
+
+  test("graft's writes fork no process and leave the permissions a plain write leaves") {
+    import spark.implicits._
+    val rows = (1 to 40).map(i => (i.toLong, s"v$i")).toDF("k", "v").repartition(2)
+    val root = Files.createTempDirectory("graft_nofork")
+    val tbl = root.resolve("tbl").toString
+    TxLog.create(spark, tbl, rows.limit(3))
+    val viaIo = root.resolve("io").toString
+    val forks = processStarts {
+      TxLog.append(spark, tbl, rows)
+      ParquetIO.write(rows, viaIo)
+    }
+    assert(forks.isEmpty)
+    val plain = root.resolve("plain").toString
+    val plainForks = processStarts(rows.write.mode("overwrite").parquet(plain))
+    // without Hadoop's native library a plain local write forks `chmod`,
+    // which shows the recording above would have seen one
+    if (!org.apache.hadoop.util.NativeCodeLoader.isNativeCodeLoaded) assert(plainForks.nonEmpty)
+    assert(modes(viaIo) === modes(plain))
+    // segments carry no _SUCCESS: compare (is a directory, mode) kinds
+    def kinds(root: String) = modes(root).map { case (rel, mode) =>
+      (Files.isDirectory(Paths.get(root, rel)), mode) }.toSet
+    assert(kinds(Paths.get(tbl, "data").toString) === kinds(plain))
+  }
+
+  // ---- guards: one read path, one writer ----
+
+  private def mainSources: Seq[(String, String)] = {
+    val root = Paths.get("src/main")
+    assert(Files.isDirectory(root), "suite must run from the repository root")
+    val s = Files.walk(root)
+    try s.iterator().asScala.filter(p => Files.isRegularFile(p) &&
+      (p.toString.endsWith(".scala") || p.toString.endsWith(".java")))
+      .map(p => p.toString.replace('\\', '/') -> Files.readString(p)).toList
+    finally s.close()
+  }
+
+  /** The name of the last `def` that starts before `at` in `text`. */
+  private def enclosingDef(text: String, at: Int): String =
+    text.substring(text.lastIndexOf("def ", at) + 4).takeWhile(c => c != '(' && c != '[').trim
+
+  test("schema-less parquet reads go through ParquetIO.read; fs.file.impl only in its writer") {
+    val sources = mainSources
+    assert(sources.size > 50)
+    // a `.read` chain ending in `.parquet(` (or a parquet `.load(`) with no
+    // explicit schema; warm's plain read shows the pattern finds one
+    val chain =
+      """\.read\b((?:\s*\.\s*\w+\((?:[^()]|\([^()]*\))*\))*?)\s*\.\s*(parquet|load)\(""".r
+    val reads = for {
+      (path, text) <- sources
+      m <- chain.findAllMatchIn(text)
+      calls = m.group(1)
+      if m.group(2) == "parquet" || calls.contains("format(\"parquet\")")
+      if !calls.contains("schema(") && !calls.contains("mergeSchema")
+    } yield path -> enclosingDef(text, m.start)
+    assert(reads.toSet === Set(
+      "src/main/scala/graft/GraftSession.scala" -> "warm"))
+    val implHits = for {
+      (path, text) <- sources
+      m <- java.util.regex.Pattern.quote("fs.file.impl").r.findAllMatchIn(text)
+    } yield path -> enclosingDef(text, m.start)
+    assert(implHits.nonEmpty && implHits.toSet ===
+      Set("src/main/scala/graft/io/ParquetIO.scala" -> "writer"))
   }
 }
