@@ -108,42 +108,19 @@ object ParquetIO {
   /**
    * Footer row count without touching data pages: sums the per-row-group
    * counts recorded in each file's footer (the same numbers `parquet-rs`'s
-   * metadata API exposes, reference src/bin/sample.rs:29-31). Driver-side
-   * and O(#files) — intended for the flat directory layout [[write]]
-   * produces (CLI parity), not for partitioned lakes; a distributed
-   * `df.count()` on an empty projection serves those.
+   * metadata API exposes, reference src/bin/sample.rs:29-31). The files
+   * are the ones a scan of `path` reads, from Spark's own listing:
+   * partition directories included, `_SUCCESS`, checksum and other hidden
+   * files skipped. An empty directory counts 0. The footers are read on
+   * the driver; no job runs.
    */
-  def rowCount(spark: SparkSession, path: String): Long = {
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    val status = fs.getFileStatus(root)
-    val files =
-      if (status.isDirectory)
-        fs.listStatus(root).toSeq.filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      else Seq(status)
-    files.map { f =>
-      val footer = ParquetFileReader.readFooter(conf, f.getPath, ParquetMetadataConverter.NO_FILTER)
-      footer.getBlocks.asScala.map(_.getRowCount).sum
-    }.sum
-  }
+  def rowCount(spark: SparkSession, path: String): Long =
+    org.apache.spark.sql.graft.FooterCounts.ofPaths(spark, Seq(path)).rows
 
   /** Number of row groups across the parquet files at `path` (footer-only;
-    * same flat-layout scope as [[rowCount]]). */
-  def rowGroupCount(spark: SparkSession, path: String): Long = {
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    val status = fs.getFileStatus(root)
-    val files =
-      if (status.isDirectory)
-        fs.listStatus(root).toSeq.filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      else Seq(status)
-    files.map { f =>
-      val footer = ParquetFileReader.readFooter(conf, f.getPath, ParquetMetadataConverter.NO_FILTER)
-      footer.getBlocks.size.toLong
-    }.sum
-  }
+    * the same files as [[rowCount]]). */
+  def rowGroupCount(spark: SparkSession, path: String): Long =
+    org.apache.spark.sql.graft.FooterCounts.ofPaths(spark, Seq(path)).rowGroups
 
   /**
    * Schema-drift report: which physical column schema does each file of a

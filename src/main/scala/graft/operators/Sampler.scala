@@ -2,11 +2,14 @@ package graft.operators
 
 import scala.annotation.tailrec
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.graft.{CheckpointBlocks, FooterCounts}
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 
 /**
  * Uniform random sampling of a table.
@@ -35,14 +38,20 @@ import org.apache.spark.sql.types.DoubleType
  *    No range sort and no shuffle, so this survives n in the billions (unlike
  *    `orderBy(rand).limit(n)`, whose TakeOrderedAndProject funnels n rows
  *    to the driver, or `rdd.takeSample`, likewise driver-bound).
+ *
+ * The total an exact entry point samples from is taken, like the
+ * reference's (sample.rs:29-37), from the parquet footers when the input is
+ * an unfiltered parquet scan of a driver-sized listing
+ * ([[FooterCounts.rowsOf]]), and is otherwise one count job. With a
+ * uniform rank the selection is then one Spark job, the candidate scan,
+ * and the caller's sink is the second.
  */
 object Sampler {
-
-  final case class SampleReport(inputRows: Long, sampleRows: Long, ratio: Double, seed: Long)
 
   private val RCOL = "__graft_sample_r"
   private val GRANK = "__graft_sample_rank"
   private val TIE = "__graft_sample_tie"
+  private val BAND = "__graft_sample_band"
 
   /** Bernoulli sampling: output size is binomial(n, ratio), single pass. */
   def bernoulli(df: DataFrame, ratio: Double, seed: Long): DataFrame = {
@@ -58,7 +67,7 @@ object Sampler {
   def exact(df: DataFrame, ratio: Double, seed: Long): DataFrame = {
     require(ratio >= 0.0 && ratio <= 1.0,
       s"ratio must be in [0,1], got $ratio (the reference would loop forever for ratio>1)")
-    val total = df.count()
+    val total = FooterCounts.rowsOf(df)
     exactN(df, (total * ratio).toLong, seed, knownTotal = total)
   }
 
@@ -76,7 +85,7 @@ object Sampler {
       seed: Long,
       knownTotal: Long = -1L,
       rankCol: Option[Column] = None): DataFrame = {
-    val total = if (knownTotal >= 0) knownTotal else df.count()
+    val total = if (knownTotal >= 0) knownTotal else FooterCounts.rowsOf(df)
     if (n <= 0 || total == 0) return df.limit(0)
     if (n >= total) return df
     smallestN(df, rankCol.getOrElse(rand(seed)).cast(DoubleType), n, total).sample
@@ -87,7 +96,7 @@ object Sampler {
    *
    * @param accepted     rows taken without a key comparison
    * @param waitList     candidates the cut chose among, after any narrowing
-   * @param keysToDriver rank keys the cut sent to the driver
+   * @param keysToDriver rank keys sent to the driver, by the scans and the cut
    */
   private[operators] final case class Selection(
       sample: DataFrame, accepted: Long, waitList: Long, keysToDriver: Long)
@@ -97,24 +106,32 @@ object Sampler {
    * candidate position) keys, NULL ranks last.
    *
    * ScaSRS with both of Meng's thresholds at failure probability 1e-8: one
-   * filtering scan keeps the rows with u < hi (at least n w.h.p.),
-   * materializes them once, tags each with its position (the tie-break)
-   * and counts per partition, in one job, the rows with u < lo (at most n
+   * filtering scan keeps the rows with u < hi (at least n w.h.p.) and, in
+   * one job, materializes them once, tags each with its position (the
+   * tie-break) and counts per partition the rows with u < lo (at most n
    * w.h.p.), which are accepted outright, and the wait-list lo <= u < hi,
-   * which holds O(sqrt(n log 1/delta)) rows. Only the wait-list reaches
-   * the cut: the driver collects the n - accepted smallest wait-list KEYS,
-   * never rows and never more keys than the wait-list holds, whatever the
-   * partition count. The sample is a lazy filter of the candidates,
-   * coalesced to the input's rows per partition: no shuffle, and the sink
-   * reads the candidates, not the input.
+   * which holds O(sqrt(n log 1/delta)) rows. The same job returns each
+   * partition's wait-list (rank, position) keys when it holds at most
+   * budget / partitions of them, the budget being max(2^16, twice the
+   * expected wait-list). When every partition sent its keys, the driver
+   * orders them as `orderBy(rank, position)` would and takes the
+   * (n - accepted)-th as the cut: no further job. Either way the driver
+   * holds only wait-list KEYS, never rows and never more than the
+   * wait-list or the budget holds, whatever the partition count. The
+   * sample is a lazy filter of the candidates, coalesced to the input's
+   * rows per partition: no shuffle, and the sink reads the candidates,
+   * not the input.
    *
    * A rank that is not uniform stays exact and keeps that driver bound, at
    * the cost of more jobs:
    *  - too few candidates: one rescan with thresholds fitted to the rank
    *    density the first scan saw, then a scan of every row;
-   *  - more than n accepted: the accepted rows join the wait-list;
-   *  - a wait-list over max(2^16, twice the expected size) rows is
-   *    narrowed by bisection on u, each step one count over the
+   *  - more than n accepted: the accepted rows join the wait-list, and its
+   *    n - accepted smallest keys come from one take-ordered job, each
+   *    partition sending at most that many;
+   *  - a partition over its share of the budget sends no keys, and the
+   *    cut is that take-ordered job too. A wait-list over the budget is
+   *    first narrowed by bisection on u, each step one count over the
    *    candidates. A wait-list of one rank value is cut by position from
    *    per-partition counts, and so are the NULL ranks that fill a
    *    shortfall. Only a wait-list whose u is one value while its ranks
@@ -131,19 +148,24 @@ object Sampler {
       total: Long,
       u: Column = col(RCOL)): Selection = {
     val withR = df.withColumn(RCOL, rank)
+    val rankType = withR.schema(RCOL).dataType
     val (lo0, hi0) = thresholds(n, total.toDouble)
     // the most keys the cut collects without narrowing the wait-list
     val budget = math.max(1L << 16, math.ceil(2 * (hi0 - lo0) * total).toLong)
+    var received = 0L // wait-list keys the scans sent
 
     // one threshold scan: the rows with u < hi (every row, NULL ranks too,
-    // once hi reaches 1), with per-partition counts of three bands:
-    // 0 = u < lo, 1 = any other non-NULL u, 2 = NULL u
-    @tailrec def scan(lo: Double, hi: Double, rescans: Int): (DataFrame, Double, Array[Array[Long]]) = {
+    // once hi reaches 1), materialized with their position and band by the
+    // job that also counts the bands per partition: 0 = u < lo, 1 = any
+    // other non-NULL u, 2 = NULL u
+    @tailrec def scan(lo: Double, hi: Double, rescans: Int): (DataFrame, Double, Array[Part]) = {
       val pool = if (hi < 1.0) withR.filter(u < hi) else withR
-      val cand = pool.withColumn(TIE, monotonically_increasing_id()).localCheckpoint()
-      val counts = bucketCounts(cand, when(u < lo, 0).when(u.isNotNull, 1).otherwise(2), 3)
-      val c = counts.iterator.map(_.sum).sum
-      if (c >= n || hi >= 1.0) (cand, lo, counts)
+      val (cand, rows) = CheckpointBlocks.deferred(pool.withColumn(TIE, monotonically_increasing_id())
+        .withColumn(BAND, when(u < lo, 0).when(u.isNotNull, 1).otherwise(2)))
+      val parts = scanBands(rows, rankType, budget, n)
+      received += parts.iterator.flatMap(_.keys).map(_.length.toLong).sum
+      val c = parts.iterator.map(_.bands.sum).sum
+      if (c >= n || hi >= 1.0) (cand, lo, parts)
       else {
         release(cand)
         val density = c / hi // non-NULL rows per unit of u, as this scan saw
@@ -153,14 +175,18 @@ object Sampler {
         } else scan(lo, 1.0, rescans + 1)
       }
     }
-    val (cand, lo1, counts) = scan(lo0, hi0, 0)
+    val (cand, lo1, parts) = scan(lo0, hi0, 0)
+    val counts = parts.map(_.bands)
 
     var lo = lo1
     var top: Option[Double] = None // the wait-list's bound on u once narrowed
     var accepted = counts.iterator.map(_(0)).sum
     var waitParts = counts.map(_(1))
+    // the whole wait-list's keys, when every partition sent its own; they
+    // number at most the budget, so the wait-list is never narrowed then
+    var keys = if (parts.forall(_.keys.isDefined)) Some(parts.flatMap(_.keys.get)) else None
     if (accepted > n) {
-      lo = Double.NegativeInfinity; accepted = 0; waitParts = counts.map(c => c(0) + c(1))
+      lo = Double.NegativeInfinity; accepted = 0; waitParts = counts.map(c => c(0) + c(1)); keys = None
     }
     def inWait: Column = top.foldLeft(u >= lo)((w, t) => w && u < t)
     var m = n - accepted // the wait-list rows the sample still needs
@@ -172,34 +198,71 @@ object Sampler {
       else if (r.getDouble(0) == r.getDouble(1)) splits = false
       else {
         val pivot = between(r.getDouble(0), r.getDouble(1))
-        val parts = bucketCounts(cand, when(inWait, when(u < pivot, 0).otherwise(1)), 2)
-        val below = parts.iterator.map(_(0)).sum
-        if (below >= m) { top = Some(pivot); waitParts = parts.map(_(0)) }
-        else { lo = pivot; accepted += below; m -= below; waitParts = parts.map(_(1)) }
+        val halves = bucketCounts(cand, when(inWait, when(u < pivot, 0).otherwise(1)), 2)
+        val below = halves.iterator.map(_(0)).sum
+        if (below >= m) { top = Some(pivot); waitParts = halves.map(_(0)) }
+        else { lo = pivot; accepted += below; m -= below; waitParts = halves.map(_(1)) }
       }
     }
 
+    // the wait-list rows up to and including the key (rank r, position tie)
+    def upTo(r: Any, tie: Long): Column =
+      inWait && (col(RCOL) < lit(r) || (col(RCOL) === lit(r) && col(TIE) <= tie))
     val w = waitParts.sum
-    val (pick, keys) =
+    val (pick, cutKeys) =
       if (m == 0) (lit(false), 0L)
       else if (m == w) (inWait, 0L)
       else if (m > w) // only before any narrowing: all non-NULL ranks, then NULLs by position
         (inWait || (u.isNull && col(TIE) <= mthTie(cand, u.isNull, counts.map(_(2)), m - w)), 1L)
       else if (tied) (inWait && col(TIE) <= mthTie(cand, inWait, waitParts, m), 1L)
-      else {
-        require(m <= Int.MaxValue, s"sample cutoff needs $m keys on the driver")
-        // takeOrdered: each partition sends at most m of its wait-list keys
-        val cut = cand.filter(inWait).select(col(RCOL), col(TIE))
-          .orderBy(col(RCOL), col(TIE)).limit(m.toInt).collect().last
-        val r = lit(cut.get(0))
-        (inWait && (col(RCOL) < r || (col(RCOL) === r && col(TIE) <= cut.getLong(1))),
-          waitParts.iterator.map(math.min(_, m)).sum)
+      else keys match {
+        case Some(ks) =>
+          // the m-th smallest key in the order of orderBy(RCOL, TIE): Spark's
+          // ordering of the rank's type, then position
+          val cut = ks.sorted(RowOrdering.createNaturalAscendingOrdering(Seq(rankType, LongType)))
+            .apply(m.toInt - 1)
+          (upTo(CatalystTypeConverters.convertToScala(cut.get(0, rankType), rankType), cut.getLong(1)), 0L)
+        case None =>
+          require(m <= Int.MaxValue, s"sample cutoff needs $m keys on the driver")
+          // takeOrdered: each partition sends at most m of its wait-list keys
+          val cut = cand.filter(inWait).select(col(RCOL), col(TIE))
+            .orderBy(col(RCOL), col(TIE)).limit(m.toInt).collect().last
+          (upTo(cut.get(0), cut.getLong(1)), waitParts.iterator.map(math.min(_, m)).sum)
       }
-    val inParts = cand.queryExecution.toRdd.getNumPartitions
-    val sample = cand.coalesce(math.max(1, math.ceil(inParts.toDouble * n / total).toInt))
+    // one Part per candidate partition
+    val sample = cand.coalesce(math.max(1, math.ceil(parts.length.toDouble * n / total).toInt))
       .filter(u < lo || pick)
-      .drop(RCOL, TIE)
-    Selection(sample, accepted, w, keys)
+      .drop(RCOL, TIE, BAND)
+    Selection(sample, accepted, w, received + cutKeys)
+  }
+
+  /** One candidate partition: its counts of bands 0, 1 and 2, and the
+    * (rank, position) keys of its band-1 rows when it sent them. */
+  private final case class Part(bands: Array[Long], keys: Option[Array[InternalRow]])
+
+  /**
+   * The one job of a threshold scan, over candidate rows that end with
+   * (rank, position, band). It stores and checkpoints the rows and returns,
+   * per partition, the counts of the bands and the band-1 (rank, position)
+   * keys of a partition holding at most `budget / partitions` of them, so
+   * the driver receives at most `budget` keys. A partition with more than
+   * n band-0 rows sends none: more than n rows are then accepted, and the
+   * cut falls among those.
+   */
+  private def scanBands(rows: RDD[InternalRow], rankType: DataType, budget: Long, n: Long): Array[Part] = {
+    val cap = budget / math.max(1, rows.getNumPartitions)
+    rows.sparkContext.runJob(rows, (it: Iterator[InternalRow]) => {
+      val bands = new Array[Long](3)
+      val keys = Array.newBuilder[InternalRow]
+      it.foreach { r =>
+        val k = r.numFields
+        val b = r.getInt(k - 1)
+        bands(b) += 1
+        if (b == 1 && bands(1) <= cap)
+          keys += InternalRow(InternalRow.copyValue(r.get(k - 3, rankType)), r.getLong(k - 2))
+      }
+      Part(bands, if (bands(1) <= cap && bands(0) <= n) Some(keys.result()) else None)
+    })
   }
 
   /**
@@ -280,7 +343,7 @@ object Sampler {
    */
   def exactNByHexRank(df: DataFrame, ratio: Double, rank: Column): DataFrame = {
     require(ratio >= 0.0 && ratio <= 1.0, s"ratio must be in [0,1], got $ratio")
-    val total = df.count()
+    val total = FooterCounts.rowsOf(df)
     val n = (total * ratio).toLong
     if (n <= 0) return df.limit(0)
     if (n >= total) return df
@@ -490,7 +553,7 @@ object Sampler {
     require(ratio >= 0.0 && ratio <= 1.0,
       s"ratio must be in [0,1], got $ratio (the reference would loop forever for ratio>1)")
     val df = graft.io.ParquetIO.read(spark, path)
-    val total = df.count()
+    val total = FooterCounts.rowsOf(df)
     val n = (total * ratio).toLong
     // positionalRank reads df's hidden _metadata column; the output keeps
     // df's visible columns only

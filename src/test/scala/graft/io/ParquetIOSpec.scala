@@ -119,6 +119,19 @@ class ParquetIOSpec extends SparkSpec {
     assert(ParquetIO.rowCount(spark, dir) === ParquetIO.read(spark, dir).count())
   }
 
+  test("rowCount and rowGroupCount descend partition directories; an empty directory counts 0") {
+    val dir = Files.createTempDirectory("graft_io").toString + "/rcp"
+    val li = spark.read.parquet(s"$sf0001/lineitem.parquet")
+    ParquetIO.writePartitioned(li, dir, Seq("l_returnflag"))
+    assert(new java.io.File(dir).listFiles().count(_.getName.startsWith("l_returnflag=")) > 1)
+    assert(ParquetIO.rowCount(spark, dir) === ParquetIO.read(spark, dir).count())
+    assert(ParquetIO.rowGroupCount(spark, dir) >= new java.io.File(dir).listFiles()
+      .filter(_.isDirectory).map(_.listFiles().count(_.getName.endsWith(".parquet"))).sum)
+    val empty = Files.createTempDirectory("graft_io").toString
+    assert(ParquetIO.rowCount(spark, empty) === 0)
+    assert(ParquetIO.rowGroupCount(spark, empty) === 0)
+  }
+
   test("compact: footer-sized rewrite cuts file count, preserves content, coalesce path shuffle-free") {
     import org.apache.spark.sql.functions.col
     val base = Files.createTempDirectory("graft_compact").toString

@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.Row
+import java.nio.file.{Files, Paths, StandardOpenOption}
+
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import org.apache.spark.sql.graft.FooterCounts
+import graft.{JobProfile, SparkSpec}
+import graft.io.ParquetIO
 
 class SamplerSpec extends SparkSpec {
   import spark.implicits._
@@ -89,13 +92,26 @@ class SamplerSpec extends SparkSpec {
     val total = 1000000L
     val n = 10000L
     val df = spark.range(0, total, 1, 200).toDF("id")
-    val s = Sampler.smallestN(df, hashRank(3L), n, total)
+    val (s, jobs) = JobProfile.jobsOf(spark)(Sampler.smallestN(df, hashRank(3L), n, total))
+    // the scan sends every wait-list key, so no cut job follows it
+    assert(jobs.size === 1, jobs)
     // Meng's thresholds at 1e-8 leave (hi - lo) * total ~ 1220 rows waiting
     assert(s.waitList > 0 && s.waitList < 1500, s"wait-list ${s.waitList}")
     assert(s.keysToDriver <= s.waitList)
     assert(s.accepted > n - s.waitList && s.accepted <= n)
     val want = df.orderBy(hashRank(3L)).limit(n.toInt).as[Long].collect().toSet
     assert(s.sample.as[Long].collect().toSet === want)
+  }
+
+  test("a constant rank with a wait-list inside the budget is cut on the driver by position") {
+    // lit(0.5) lies above the first scan's upper threshold, so the rescan
+    // keeps all 3000 rows, every one of them waiting: the cut takes the
+    // first 1000 by position from the keys the rescan sent
+    val df = spark.range(0, 3000, 1, 4).toDF("id")
+    val (s, jobs) = JobProfile.jobsOf(spark)(Sampler.smallestN(df, lit(0.5), 1000L, 3000L))
+    assert(jobs.size === 2, jobs)
+    assert(s.waitList === 3000 && s.keysToDriver === 3000)
+    assert(s.sample.as[Long].collect().toSet === (0L until 1000L).toSet)
   }
 
   test("a rank that is NULL on most rows still gives the n smallest ranks") {
@@ -143,7 +159,9 @@ class SamplerSpec extends SparkSpec {
     val li = spark.read.parquet(s"$sf0001/lineitem.parquet")
     val rk = md5(concat_ws(":", lit("42"), col("l_orderkey").cast("string"),
       col("l_linenumber").cast("string")).cast("binary"))
-    val got = Sampler.exactNByHexRank(li, 0.05, rk)
+    // the scan sends the wait-list's md5 keys and the driver cuts them
+    val (got, built) = JobProfile.jobsOf(spark)(Sampler.exactNByHexRank(li, 0.05, rk))
+    assert(built.size === 1, built)
     val total = li.count()
     val n = (total * 0.05).toLong
     assert(got.count() === n)
@@ -172,6 +190,80 @@ class SamplerSpec extends SparkSpec {
       .select($"id").as[Long].collect().toSet
     assert(ids(0.1).size === 2 && ids(0.1).subsetOf((1L to 4L).toSet))
     assert(ids(0.5).size === 10 && (1L to 4L).toSet.subsetOf(ids(0.5)))
+  }
+
+  private def jobs(body: => Any): Seq[String] = JobProfile.jobsOf(spark)(body)._2
+
+  test("an exact sample of plain parquet runs one job to build and one more to write") {
+    val path = s"$sf0001/lineitem.parquet"
+    val plain = spark.read.parquet(path)
+    val out = Files.createTempDirectory("graft_sample_jobs").toString + "/s"
+    // the total comes from the footers, and the scan sends the wait-list's
+    // keys: the candidate scan is the only job
+    assert(jobs(Sampler.exact(plain, 0.01, 42L)).size === 1)
+    assert(jobs(Sampler.exactFromParquet(spark, path, 0.01, 42L)).size === 1)
+    assert(jobs(ParquetIO.write(Sampler.exact(plain, 0.01, 42L), out)).size === 2)
+    assert(jobs(ParquetIO.write(Sampler.exactFromParquet(spark, path, 0.01, 42L), out)).size === 2)
+    assert(ParquetIO.rowCount(spark, out) === (total * 0.01).toLong)
+    // a filtered frame has no footer total: one count job first
+    assert(jobs(Sampler.exact(plain.filter($"l_quantity" > 10), 0.01, 42L)).size === 2)
+  }
+
+  test("the footer total equals count() on every parquet layout, and the sample is exact") {
+    val base = Files.createTempDirectory("graft_total").toString
+    li.repartition(3).write.parquet(s"$base/plain")
+    val names = new java.io.File(s"$base/plain").list().toSeq
+    assert(names.contains("_SUCCESS") && names.exists(_.endsWith(".crc")), names)
+    ParquetIO.writePartitioned(li, s"$base/parted", Seq("l_returnflag"))
+    ParquetIO.write(li.limit(100), s"$base/second")
+    Files.createDirectories(Paths.get(s"$base/empty"))
+    val inputs = Seq(
+      "plain" -> spark.read.parquet(s"$base/plain"),
+      "partitioned" -> spark.read.parquet(s"$base/parted"),
+      "two paths" -> spark.read.parquet(s"$base/plain", s"$base/second"),
+      "empty" -> spark.read.schema(li.schema).parquet(s"$base/empty"))
+    for ((what, df) <- inputs) {
+      val want = df.count()
+      val (got, totalJobs) = JobProfile.jobsOf(spark)(FooterCounts.rowsOf(df))
+      assert(got === want && totalJobs.isEmpty, s"$what: $totalJobs")
+      assert(Sampler.exact(df, 0.05, 42L).count() === (want * 0.05).toLong, what)
+    }
+    // nothing to sample: n = 0 and no scan runs
+    assert(jobs(Sampler.exact(inputs.last._2, 0.5, 42L)).isEmpty)
+    // more files than Spark lists on the driver: rowsOf counts in one job,
+    // while rowCount still reads every footer on the driver
+    val plain = inputs.head._2
+    spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold", "2")
+    try {
+      val (got, countJobs) = JobProfile.jobsOf(spark)(FooterCounts.rowsOf(plain))
+      assert(got === plain.count() && countJobs.size === 1, countJobs)
+      val (rows, footerJobs) = JobProfile.jobsOf(spark)(ParquetIO.rowCount(spark, s"$base/plain"))
+      assert(rows === plain.count() && footerJobs.isEmpty, footerJobs)
+    } finally spark.conf.unset("spark.sql.sources.parallelPartitionDiscovery.threshold")
+  }
+
+  test("a truncated file under ignoreCorruptFiles takes the one-job count, and the sample stays exact") {
+    val dir = Files.createTempDirectory("graft_corrupt").toString + "/t"
+    li.repartition(2).write.parquet(dir)
+    val part = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet")).head.toPath
+    val head = java.util.Arrays.copyOf(Files.readAllBytes(part), 100)
+    Files.write(part, head, StandardOpenOption.TRUNCATE_EXISTING)
+    spark.conf.set("spark.sql.files.ignoreCorruptFiles", "true")
+    try {
+      val df = spark.read.schema(li.schema).parquet(dir)
+      val want = df.count()
+      assert(want > 0 && want < total)
+      val (got, totalJobs) = JobProfile.jobsOf(spark)(FooterCounts.rowsOf(df))
+      assert(got === want && totalJobs.size === 1, totalJobs)
+      assert(Sampler.exact(df, 0.05, 42L).count() === (want * 0.05).toLong)
+    } finally spark.conf.unset("spark.sql.files.ignoreCorruptFiles")
+  }
+
+  test("Sampler.scala counts no rows itself: every total goes through FooterCounts.rowsOf") {
+    val src = Files.readString(Paths.get("src/main/scala/graft/operators/Sampler.scala"))
+    assert(src.contains("FooterCounts.rowsOf("))
+    assert(!"""\.count\(\s*\)""".r.findFirstIn(src).isDefined,
+      "a .count() in Sampler.scala runs a job FooterCounts.rowsOf may avoid")
   }
 
   test("exactN caps at total and handles n=0") {
