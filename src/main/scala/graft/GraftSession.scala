@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one SparkSession config shared by every entry point (Bench, Verify,
-  * JobProfile, ScaleProbe, the `sample`/`join` CLI) and by the test suites.
+  * JobProfile, the `sample`/`join` CLI) and by the test suites.
   * A profile or plan taken under a config other than Bench's is no evidence
   * about Bench, so the settings live here and nowhere else. */
 object GraftSession {

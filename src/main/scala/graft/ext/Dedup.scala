@@ -936,17 +936,12 @@ object Dedup {
       // ratio > 0.9: a walking frontier (chain/giant component); geometric
       // tails of shallow graphs sit well below it
       plateau = iter + 1 >= MinHookRounds && changed * 10 > prevChanged * 9
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"[cc] hook round ${iter + 1}: changed=$changed prev=$prevChanged plateau=$plateau")
       prevChanged = changed
       labels = next.select(col("id"), col("label"))
       iter += 1
     }
 
-    val hookIters = iter
-    var escalated = false
     if (!converged) {
-      escalated = true
       // PHASE 2: contract by current labels (one-time two joins over the
       // edge set), then large-star/small-star on the contracted graph.
       // Label values include each component's min (l(m) = m always), so
@@ -985,8 +980,6 @@ object Dedup {
           .distinct()
           .localCheckpoint()
         converged = small.count() == edges.count() && small.except(edges).isEmpty
-        if (sys.env.contains("GRAFT_CC_DEBUG"))
-          println(s"[cc] star round ${iter + 1}: edges=${small.count()} converged=$converged")
         edges = small
         iter += 1
       }
@@ -1010,18 +1003,11 @@ object Dedup {
 
     // singletons (never paired) are their own cluster; anti-join keeps the
     // corpus-sized side to ONE pass at the very end
-    lastClusterTelemetry = CcTelemetry(hookIters, iter - hookIters, escalated)
     val singletons = vertices.select(col(idCol).as("id"))
       .join(labels.select(col("id")), Seq("id"), "left_anti")
       .select(col("id"), col("id").as("cluster_id"))
     labels.select(col("id"), col("label").as("cluster_id")).unionByName(singletons)
   }
-
-  /** Round counts of the most recent [[duplicateClusters]] call on this
-    * driver — the machine-readable twin of GRAFT_CC_DEBUG, recorded by
-    * ScaleProbe so a probe ratio is attributable to its round structure. */
-  case class CcTelemetry(hookRounds: Int, starRounds: Int, escalated: Boolean)
-  @volatile var lastClusterTelemetry: CcTelemetry = CcTelemetry(0, 0, escalated = false)
 
   /** Phase-1 budget for [[duplicateClusters]]: min-label rounds run until
     * convergence, a change-count plateau (checked from round

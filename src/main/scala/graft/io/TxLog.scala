@@ -490,13 +490,14 @@ class TxLogOps(store0: LogStore, val checkpointInterval: Int = 10,
     store.list(table).filter(_.endsWith(".commit"))
       .map(_.stripSuffix(".commit").toLong).sorted
 
-  /** Manifest parses since JVM start — probe telemetry only (ScaleProbe
-    * pins that vacuum's parse count tracks the delta since the last
-    * vacuum, not the table's version count). Never read by the engine. */
+  /** Manifest parses by this instance — spec telemetry only (TxLogSpec
+    * pins that a commit's parses and vacuum's track the checkpoint tail
+    * and the delta since the last vacuum, not the table's version count).
+    * Never read by the engine. */
   val manifestParseCount = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Segments entering a COW discovery SCAN since JVM start (post
-    * manifest pre-prune) — probe/spec telemetry only: pins that the
+    * manifest pre-prune) — spec telemetry only: pins that the
     * compound-key envelope conjunction keeps provably untouched segments
     * out of the scan entirely. Never read by the engine. */
   val cowScanCount = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -1159,7 +1160,7 @@ class TxLogOps(store0: LogStore, val checkpointInterval: Int = 10,
   }
 
   /** Lost claims that re-ran their plan / were manifest-rebased without a
-    * recompute — probe/spec telemetry only (pins that concurrent appends
+    * recompute — spec telemetry only (pins that concurrent appends
     * never recompute). Never read by the engine. */
   val commitRecomputeCount = new java.util.concurrent.atomic.AtomicLong(0L)
   val commitRebaseCount = new java.util.concurrent.atomic.AtomicLong(0L)

@@ -32,8 +32,7 @@ object SemiJoinReducer {
       dimCol: String,
       fact: DataFrame,
       factCol: String,
-      legacyStringKeys: Boolean = false,
-      broadcastKeys: Boolean = true): DataFrame = {
+      legacyStringKeys: Boolean = false): DataFrame = {
     // Fail fast on a missing column, mirroring the reference's assert
     // (join.rs:89-99) — Catalyst would throw at analysis anyway, but with a
     // wordier message.
@@ -41,10 +40,9 @@ object SemiJoinReducer {
     require(fact.columns.contains(factCol), s"column '$factCol' not in fact schema: ${fact.columns.mkString(",")}")
 
     val keyName = "__graft_semi_key"
-    val rawKeys =
+    val keys = broadcast(
       if (legacyStringKeys) fact.select(col(factCol).cast("string").as(keyName)).distinct()
-      else fact.select(col(factCol).as(keyName)).distinct()
-    val keys = if (broadcastKeys) broadcast(rawKeys) else rawKeys
+      else fact.select(col(factCol).as(keyName)).distinct())
 
     val cond =
       if (legacyStringKeys) dim(dimCol).cast("string") <=> keys(keyName) // NULL matches NULL (join.rs:66-70)
@@ -58,11 +56,9 @@ object SemiJoinReducer {
       dim: DataFrame,
       dimCol: String,
       fact: DataFrame,
-      factCol: String,
-      broadcastKeys: Boolean = true): DataFrame = {
+      factCol: String): DataFrame = {
     val keyName = "__graft_semi_key"
-    val rawKeys = fact.select(col(factCol).as(keyName)).distinct()
-    val keys = if (broadcastKeys) broadcast(rawKeys) else rawKeys
+    val keys = broadcast(fact.select(col(factCol).as(keyName)).distinct())
     dim.join(keys, dim(dimCol) === keys(keyName), "left_anti")
   }
 }

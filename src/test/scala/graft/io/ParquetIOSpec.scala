@@ -462,4 +462,12 @@ class ParquetIOSpec extends SparkSpec {
     assert(implHits.nonEmpty && implHits.toSet ===
       Set("src/main/scala/graft/io/ParquetIO.scala" -> "writer"))
   }
+
+  test("footers are read without opening a ParquetFileReader") {
+    val opens = for {
+      (path, text) <- mainSources
+      m <- """ParquetFileReader\s*\.\s*open\b""".r.findAllMatchIn(text)
+    } yield path -> enclosingDef(text, m.start)
+    assert(opens.isEmpty, s"ParquetFileReader.open under src/main: $opens")
+  }
 }

@@ -73,7 +73,10 @@ class TxLogRefsSpec extends SparkSpec {
     TxLog.createBranch(spark, tbl, "stage")
     val br = TxLog.branchTable(tbl, "stage")
     TxLog.append(spark, br, Seq((2L, "b", 20L)).toDF("k", "name", "v"))
+    def dataDirs = new java.io.File(tbl, "data").list().toSet
+    val dirsBefore = dataDirs
     val pub = TxLog.publishBranch(spark, tbl, "stage")
+    assert(dataDirs === dirsBefore, "publish wrote under the data directory")
     assert(pub.version === 1L && pub.op.startsWith("publish_append:stage:"))
     assert(rows(tbl) === Set((1L, "a", 10L), (2L, "b", 20L)))
     // the publish moved ZERO data: the root's new manifest references the

@@ -1428,4 +1428,52 @@ class TxLogSpec extends SparkSpec {
     assert(snap.op.contains("rewritten=0"), s"got op ${snap.op}")
     assert(TxLog.read(spark, tbl).count() === 17)
   }
+
+  // ---- scale contracts: log work stays flat as a table's history grows ----
+
+  private def oneRowCommits(ops: TxLogOps, tbl: String, from: Int, to: Int): Unit =
+    (from to to).foreach(i => ops.appendStreamBatch(
+      spark, tbl, Seq((0L, 1L)).toDF("k", "v"), "s", i.toLong))
+
+  test("vacuum parses the versions since the previous vacuum, not the table's history") {
+    // a private TxLogOps: other suites' commits cannot move its counter
+    val ops = new TxLogOps(PosixLogStore)
+    def secondVacuumParses(commits: Int): Long = {
+      val tbl = freshTable()
+      ops.create(spark, tbl, Seq((0L, 1L)).toDF("k", "v"))
+      oneRowCommits(ops, tbl, 1, commits)
+      ops.vacuum(spark, tbl, retainVersions = 5)
+      // ten rewrites strand segments for the second vacuum to reclaim
+      (1 to 10).foreach(_ => ops.compact(spark, tbl, 1))
+      val p0 = ops.manifestParseCount.get()
+      ops.vacuum(spark, tbl, retainVersions = 5)
+      val parses = ops.manifestParseCount.get() - p0
+      assert(ops.read(spark, tbl).count() === commits + 1L)
+      parses
+    }
+    val short = secondVacuumParses(10)
+    val long = secondVacuumParses(40)
+    assert(short === long,
+      s"second vacuum parsed $short manifests after 10 commits, $long after 40")
+  }
+
+  test("a commit's log work does not grow with the log: same parses and jobs at version 10 and 40") {
+    val ops = new TxLogOps(PosixLogStore, checkpointInterval = 10)
+    val tbl = freshTable()
+    ops.create(spark, tbl, Seq((0L, 1L)).toDF("k", "v"))
+    oneRowCommits(ops, tbl, 1, 10)
+    // the ten commits after version v, each window crossing one checkpoint
+    def tenCommitsAfter(v: Int): (Long, Int) = {
+      assert(ops.latest(tbl).version === v.toLong)
+      val p0 = ops.manifestParseCount.get()
+      val (_, jobs) = graft.JobProfile.jobsOf(spark)(oneRowCommits(ops, tbl, v + 1, v + 10))
+      (ops.manifestParseCount.get() - p0, jobs.size)
+    }
+    val early = tenCommitsAfter(10)
+    oneRowCommits(ops, tbl, 21, 40)
+    val late = tenCommitsAfter(40)
+    assert(early === late,
+      s"(parses, jobs) of ten commits: $early after version 10, $late after version 40")
+    assert(ops.read(spark, tbl).count() === 51L)
+  }
 }

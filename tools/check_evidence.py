@@ -3,16 +3,15 @@
 in the committed bench detail, the bench must not have benched unknown
 queries, and no benched query may have errored. Run at end of round:
 
-    check_evidence.py <BENCH_DETAIL_rN.json> <verifyOutDir> [SCALEPROBE.json]
+    check_evidence.py <BENCH_DETAIL_rN.json> <verifyOutDir>
 
 The verify out dir supplies manifest.json (written by graft.Verify) — the
-authoritative declared-query list for the same build. The optional third
-arg asserts SCALEPROBE criteria: a probe that declares a criterion (parse
-count, bytes written, …) must have criterion_ok=true — the criterion, not
-the wall ratio, is the probe's pass/fail (a sub-second wall ratio must
-never read as a regression).
+authoritative declared-query list for the same build.
 """
 import sys, json, os
+
+if len(sys.argv) != 3:
+    sys.exit("usage: check_evidence.py <BENCH_DETAIL_rN.json> <verifyOutDir>")
 
 detail = json.load(open(sys.argv[1]))
 declared = set(json.load(open(os.path.join(sys.argv[2], "manifest.json"))))
@@ -30,15 +29,5 @@ for e in sorted(errors):
     fails += 1
     print(f"bench query ERRORED (timing is not evidence): {e}")
 print(f"declared={len(declared)} benched={len(benched)} errors={len(errors)}")
-
-if len(sys.argv) > 3:
-    probes = json.load(open(sys.argv[3]))
-    with_crit = [p for p in probes if "criterion" in p]
-    for p in with_crit:
-        if not p.get("criterion_ok", False):
-            fails += 1
-            print(f"SCALEPROBE criterion FAILED: {p['op']} — {p['criterion']}")
-    print(f"scaleprobe: {len(probes)} probes, {len(with_crit)} with criteria, "
-          f"{sum(1 for p in with_crit if p.get('criterion_ok'))} ok")
 
 sys.exit(1 if fails else 0)
