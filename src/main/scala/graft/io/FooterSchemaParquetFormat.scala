@@ -5,9 +5,9 @@ import scala.util.control.NonFatal
 import org.apache.hadoop.fs.FileStatus
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetOptions, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOptions, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.graft.Footers
 import org.apache.spark.sql.types.StructType
 
 /**
@@ -44,8 +44,7 @@ class FooterSchemaParquetFormat extends ParquetFileFormat {
       else FooterSchemaParquetFormat.schemaFile(files).flatMap { f =>
         try {
           val hadoopConf = sparkSession.sessionState.newHadoopConfWithOptions(parameters)
-          val meta = ParquetFooterReader.readFooter(
-            HadoopInputFile.fromStatus(f, hadoopConf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+          val meta = Footers.read(hadoopConf, f, ParquetMetadataConverter.SKIP_ROW_GROUPS)
           val converter = new ParquetToSparkSchemaConverter(
             assumeBinaryIsString = conf.isParquetBinaryAsString,
             assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,

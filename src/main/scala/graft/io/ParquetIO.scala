@@ -3,9 +3,8 @@ package graft.io
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.format.converter.ParquetMetadataConverter
-import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
+import org.apache.spark.sql.graft.Footers
 
 /**
  * Parquet source/sink.
@@ -112,15 +111,15 @@ object ParquetIO {
    * are the ones a scan of `path` reads, from Spark's own listing:
    * partition directories included, `_SUCCESS`, checksum and other hidden
    * files skipped. An empty directory counts 0. The footers are read on
-   * the driver; no job runs.
+   * the driver whatever the file count; no job runs.
    */
   def rowCount(spark: SparkSession, path: String): Long =
-    org.apache.spark.sql.graft.FooterCounts.ofPaths(spark, Seq(path)).rows
+    Footers.counts(spark, Seq(path)).rows
 
   /** Number of row groups across the parquet files at `path` (footer-only;
     * the same files as [[rowCount]]). */
   def rowGroupCount(spark: SparkSession, path: String): Long =
-    org.apache.spark.sql.graft.FooterCounts.ofPaths(spark, Seq(path)).rowGroups
+    Footers.counts(spark, Seq(path)).rowGroups
 
   /**
    * Schema-drift report: which physical column schema does each file of a
@@ -132,114 +131,69 @@ object ParquetIO {
    * directory is safe to read with `mergeSchema` / schema enforcement,
    * without touching a single data page.
    *
-   * Scale shape: file listing on the driver (O(#files) names), then footer
-   * reads DISTRIBUTED across executors (`mapPartitions` over the file
-   * list, session Hadoop conf broadcast for filesystem access) — at 100 TB
-   * with millions of files the footer fetches are the cost, and they
-   * parallelize perfectly; only (file, column, type) tuples shuffle into
-   * the final count.
+   * The files are the ones a scan of `paths` reads, partition
+   * subdirectories included (drift most often hides there). Their footers
+   * are read on the driver up to the listing threshold and in one job
+   * above it ([[Footers.fold]]); the report itself is a local relation.
    */
   def schemaReport(spark: SparkSession, paths: Seq[String]): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{col, count, lit}
     require(paths.nonEmpty, "paths must not be empty")
-    val conf = spark.sessionState.newHadoopConf()
-    val files: Seq[String] = paths.flatMap { p =>
-      val root = new Path(p)
-      val fs = root.getFileSystem(conf)
-      val status = fs.getFileStatus(root)
-      if (status.isDirectory) {
-        // RECURSIVE listing: drift most often hides inside hive-partition
-        // subdirectories (lang=en/...), which a flat listStatus would
-        // silently skip — the audit must see every file
-        val out = Seq.newBuilder[String]
-        val it = fs.listFiles(root, true)
-        while (it.hasNext) {
-          val f = it.next()
-          if (f.isFile && f.getPath.getName.endsWith(".parquet"))
-            out += f.getPath.toString
-        }
-        out.result()
-      } else Seq(status.getPath.toString)
-    }
+    val files = Footers.listed(spark, paths)
     require(files.nonEmpty, s"no parquet files under ${paths.mkString(", ")}")
-    val bc = org.apache.spark.sql.graft.HadoopConfBridge.broadcastConf(spark)
-    val perFile = spark.createDataset(files)
-      .repartition(math.min(files.size, spark.sparkContext.defaultParallelism))
-      .mapPartitions { it =>
-        val c = org.apache.spark.sql.graft.HadoopConfBridge.confOf(bc)
-        it.flatMap { f =>
-          val footer = ParquetFileReader.readFooter(c, new Path(f),
-            ParquetMetadataConverter.NO_FILTER)
-          footer.getFileMetaData.getSchema.getColumns.asScala.map { cd =>
-            (f, cd.getPath.mkString("."), cd.getPrimitiveType.getPrimitiveTypeName.name)
-          }
-        }
-      }.toDF("file", "col_name", "physical_type")
-    perFile.groupBy(col("col_name"), col("physical_type"))
-      .agg(count(lit(1)).as("n_files"))
+    val nFiles = Footers.fold(spark, files, spark.sessionState.newHadoopConf()) { (_, footer) =>
+      footer.getFileMetaData.getSchema.getColumns.asScala.map { cd =>
+        (cd.getPath.mkString("."), cd.getPrimitiveType.getPrimitiveTypeName.name) -> 1L
+      }.toMap
+    } { (a, b) => b.foldLeft(a) { case (m, (k, n)) => m.updated(k, m.getOrElse(k, 0L) + n) } }
+    nFiles.get.toSeq.map { case ((c, t), n) => (c, t, n) }
+      .toDF("col_name", "physical_type", "n_files")
   }
 
   /**
    * Per-file min/max SKIPPING INDEX for one numeric column — the data-
    * skipping layer every lakehouse keeps beside the data (Delta/Iceberg
    * file stats, Databricks Z-order's companion): footer statistics only,
-   * no data pages touched, so building it costs O(#files) footer fetches
-   * distributed across executors (the [[schemaReport]] machinery).
+   * no data pages touched. The footers are read on the driver up to the
+   * listing threshold and in one job above it ([[Footers.fold]]).
    *
    * Returns one row per file: (file, row_count, min_v, max_v, has_stats).
    * Files whose footer lacks statistics for the column surface
-   * `has_stats = false` with NULL bounds — the honest "must read" marker
+   * `has_stats = false` with NaN bounds — the honest "must read" marker
    * ([[prunedFiles]] never skips them). int32/int64/float/double columns
    * widen to double bounds (exact for ints < 2^53 — every key/date/cents
    * column in practice).
    */
   def fileStatsIndex(spark: SparkSession, path: String, column: String): DataFrame = {
     import spark.implicits._
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    val files: Seq[String] = {
-      val out = Seq.newBuilder[String]
-      val it = fs.listFiles(root, true)
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.isFile && f.getPath.getName.endsWith(".parquet"))
-          out += f.getPath.toString
-      }
-      out.result()
-    }
+    val files = Footers.listed(spark, Seq(path))
     require(files.nonEmpty, s"no parquet files under $path")
-    val bc = org.apache.spark.sql.graft.HadoopConfBridge.broadcastConf(spark)
-    spark.createDataset(files)
-      .repartition(math.min(files.size, spark.sparkContext.defaultParallelism))
-      .map { f =>
-        val c = org.apache.spark.sql.graft.HadoopConfBridge.confOf(bc)
-        val footer = ParquetFileReader.readFooter(c, new Path(f),
-          ParquetMetadataConverter.NO_FILTER)
-        val blocks = footer.getBlocks.asScala
-        val rows = blocks.map(_.getRowCount).sum
-        def num(v: Any): Double = v match {
-          case i: java.lang.Integer => i.toDouble
-          case l: java.lang.Long => l.toDouble
-          case fl: java.lang.Float => fl.toDouble
-          case d: java.lang.Double => d
-          case other => throw new IllegalArgumentException(
-            s"fileStatsIndex supports numeric columns; $column has ${other.getClass}")
-        }
-        val perBlock = blocks.flatMap { b =>
-          b.getColumns.asScala
-            .find(_.getPath.toDotString == column)
-            .map(_.getStatistics)
-        }
-        val ok = perBlock.nonEmpty &&
-          perBlock.forall(s => s != null && s.hasNonNullValue)
-        if (ok)
-          (f, rows, perBlock.map(s => num(s.genericGetMin)).min,
-            perBlock.map(s => num(s.genericGetMax)).max, true)
-        else (f, rows, Double.NaN, Double.NaN, false)
+    val perFile = Footers.fold(spark, files, spark.sessionState.newHadoopConf()) { (f, footer) =>
+      val blocks = footer.getBlocks.asScala
+      val rows = blocks.map(_.getRowCount).sum
+      def num(v: Any): Double = v match {
+        case i: java.lang.Integer => i.toDouble
+        case l: java.lang.Long => l.toDouble
+        case fl: java.lang.Float => fl.toDouble
+        case d: java.lang.Double => d
+        case other => throw new IllegalArgumentException(
+          s"fileStatsIndex supports numeric columns; $column has ${other.getClass}")
       }
-      .toDF("file", "row_count", "min_v", "max_v", "has_stats")
+      val perBlock = blocks.flatMap { b =>
+        b.getColumns.asScala
+          .find(_.getPath.toDotString == column)
+          .map(_.getStatistics)
+      }
+      val ok = perBlock.nonEmpty &&
+        perBlock.forall(s => s != null && s.hasNonNullValue)
+      val file = f.getPath.toString
+      Vector(
+        if (ok)
+          (file, rows, perBlock.map(s => num(s.genericGetMin)).min,
+            perBlock.map(s => num(s.genericGetMax)).max, true)
+        else (file, rows, Double.NaN, Double.NaN, false))
+    }(_ ++ _)
+    perFile.get.toDF("file", "row_count", "min_v", "max_v", "has_stats")
   }
 
   /**

@@ -77,31 +77,24 @@ object ZOrder {
   }
 
   /** Row groups whose [min, max] envelope on `column` overlaps
-    * [lo, hi] — the set a statistics-pruning scan would actually read.
-    * Footer-only: no row data is touched, and no `ParquetFileReader` is
-    * opened (opening one costs about 30x the footer read). */
+    * [lo, hi] — the set a statistics-pruning scan would actually read —
+    * and all row groups, over the files a scan of `path` reads.
+    * Footer-only: no row data is touched; the footers are read on the
+    * driver up to the listing threshold and in one job above it
+    * ([[org.apache.spark.sql.graft.Footers.fold]]). */
   def overlappingRowGroups(
       spark: org.apache.spark.sql.SparkSession, path: String,
       column: String, lo: Double, hi: Double): (Long, Long) = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
+    import org.apache.spark.sql.graft.Footers
     import scala.jdk.CollectionConverters._
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(path).getFileSystem(conf)
-    val files = fs.listStatus(new Path(path)).map(_.getPath)
-      .filter(p => p.getName.endsWith(".parquet"))
-    var total = 0L
-    var overlapping = 0L
-    files.foreach { f =>
-      val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromPath(f, conf), NO_FILTER)
-      footer.getBlocks.asScala.foreach { block =>
-        total += 1
+    val files = Footers.listed(spark, Seq(path))
+    Footers.fold(spark, files, spark.sessionState.newHadoopConf()) { (f, footer) =>
+      val blocks = footer.getBlocks.asScala
+      val overlapping = blocks.count { block =>
         val colChunk = block.getColumns.asScala
           .find(_.getPath.toDotString == column)
           .getOrElse(throw new IllegalArgumentException(
-            s"column '$column' not found in $f"))
+            s"column '$column' not found in ${f.getPath}"))
         val stats = colChunk.getStatistics
         val (mn, mx) = (stats.genericGetMin, stats.genericGetMax) match {
           case (a: java.lang.Number, b: java.lang.Number) =>
@@ -109,9 +102,9 @@ object ZOrder {
           case other => throw new IllegalArgumentException(
             s"non-numeric stats for '$column': $other")
         }
-        if (mx >= lo && mn <= hi) overlapping += 1
+        mx >= lo && mn <= hi
       }
-    }
-    (overlapping, total)
+      (overlapping.toLong, blocks.size.toLong)
+    } { case ((o1, t1), (o2, t2)) => (o1 + o2, t1 + t2) }.getOrElse((0L, 0L))
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{CheckpointBlocks, FooterCounts}
+import org.apache.spark.sql.graft.{CheckpointBlocks, Footers}
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 
 /**
@@ -42,7 +42,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
  * The total an exact entry point samples from is taken, like the
  * reference's (sample.rs:29-37), from the parquet footers when the input is
  * an unfiltered parquet scan of a driver-sized listing
- * ([[FooterCounts.rowsOf]]), and is otherwise one count job. With a
+ * ([[Footers.rowsOf]]), and is otherwise one count job. With a
  * uniform rank the selection is then one Spark job, the candidate scan,
  * and the caller's sink is the second.
  */
@@ -67,7 +67,7 @@ object Sampler {
   def exact(df: DataFrame, ratio: Double, seed: Long): DataFrame = {
     require(ratio >= 0.0 && ratio <= 1.0,
       s"ratio must be in [0,1], got $ratio (the reference would loop forever for ratio>1)")
-    val total = FooterCounts.rowsOf(df)
+    val total = Footers.rowsOf(df)
     exactN(df, (total * ratio).toLong, seed, knownTotal = total)
   }
 
@@ -85,7 +85,7 @@ object Sampler {
       seed: Long,
       knownTotal: Long = -1L,
       rankCol: Option[Column] = None): DataFrame = {
-    val total = if (knownTotal >= 0) knownTotal else FooterCounts.rowsOf(df)
+    val total = if (knownTotal >= 0) knownTotal else Footers.rowsOf(df)
     if (n <= 0 || total == 0) return df.limit(0)
     if (n >= total) return df
     smallestN(df, rankCol.getOrElse(rand(seed)).cast(DoubleType), n, total).sample
@@ -343,7 +343,7 @@ object Sampler {
    */
   def exactNByHexRank(df: DataFrame, ratio: Double, rank: Column): DataFrame = {
     require(ratio >= 0.0 && ratio <= 1.0, s"ratio must be in [0,1], got $ratio")
-    val total = FooterCounts.rowsOf(df)
+    val total = Footers.rowsOf(df)
     val n = (total * ratio).toLong
     if (n <= 0) return df.limit(0)
     if (n >= total) return df
@@ -553,7 +553,7 @@ object Sampler {
     require(ratio >= 0.0 && ratio <= 1.0,
       s"ratio must be in [0,1], got $ratio (the reference would loop forever for ratio>1)")
     val df = graft.io.ParquetIO.read(spark, path)
-    val total = FooterCounts.rowsOf(df)
+    val total = Footers.rowsOf(df)
     val n = (total * ratio).toLong
     // positionalRank reads df's hidden _metadata column; the output keeps
     // df's visible columns only

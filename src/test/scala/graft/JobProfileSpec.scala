@@ -2,7 +2,8 @@ package graft
 
 /** JobProfile's critical-path wall is the union of job and SQL-execution
   * intervals: concurrent jobs must count once, not summed. `jobsOf`
-  * counts exactly the jobs its body starts. */
+  * counts exactly the jobs its body starts, and profile mode counts the
+  * same jobs. */
 class JobProfileSpec extends SparkSpec {
   import JobProfile.{covered, jobsOf}
 
@@ -34,5 +35,18 @@ class JobProfileSpec extends SparkSpec {
     assert(n === 15L && jobs.size === 2, jobs)
     val (_, sql) = jobsOf(spark)(spark.range(100).selectExpr("sum(id)").collect())
     assert(sql.nonEmpty && sql.forall(_.startsWith("collect at")), sql)
+  }
+
+  test("profile mode counts a broadcast semi-join's Spark jobs as jobsOf does, under its root execution") {
+    import org.apache.spark.sql.functions.broadcast
+    def semi = spark.range(0, 1000).join(broadcast(spark.range(0, 1000, 7)), Seq("id"), "left_semi")
+    val (n, t) = JobProfile.trace(spark)(semi.count())
+    val (_, jobs) = jobsOf(spark)(semi.count())
+    assert(n === 143L)
+    val rows = JobProfile.bySite(t.jobs)
+    // the broadcast and the count's stages are jobs of one root execution
+    assert(jobs.size >= 2 && rows.map(_._2).sum === jobs.size, (rows, jobs))
+    assert(t.executions.size === 1 && rows.map(_._1) === Seq(t.executions.head.site), (rows, t))
+    assert(t.criticalMs > 0 && t.criticalMs <= t.end - t.start, t)
   }
 }

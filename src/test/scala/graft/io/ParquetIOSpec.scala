@@ -470,4 +470,15 @@ class ParquetIOSpec extends SparkSpec {
     } yield path -> enclosingDef(text, m.start)
     assert(opens.isEmpty, s"ParquetFileReader.open under src/main: $opens")
   }
+
+  test("one footer layer: only Footers reads footers; no deprecated reader, conf bridge or stat-file cap") {
+    val sources = mainSources
+    def files(pattern: String): Set[String] =
+      sources.collect { case (path, text) if pattern.r.findFirstIn(text).isDefined => path }.toSet
+    assert(files("""ParquetFileReader\s*\.\s*readFooter\b""").isEmpty)
+    assert(files("""\bParquetFooterReader\b""") ===
+      Set("src/main/scala/org/apache/spark/sql/graft/Footers.scala"))
+    assert(files("""\bHadoopConfBridge\b""").isEmpty)
+    assert(files("""\bMaxStatFiles\b""").isEmpty)
+  }
 }

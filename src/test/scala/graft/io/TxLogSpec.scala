@@ -1030,13 +1030,14 @@ class TxLogSpec extends SparkSpec {
   }
 
   test("distributed envelopes: a segment above the driver footer cap still records stats and row counts") {
-    // tiny cap forces the DISTRIBUTED footer pass on a 4-file segment
-    val ops = new TxLogOps(PosixLogStore) {
-      override protected def MaxStatFiles: Int = 2
-    }
+    // a listing threshold of 2 puts a 4-file segment's footers in a job
+    val ops = new TxLogOps(PosixLogStore)
     val tbl = freshTable()
-    ops.create(spark, tbl,
-      spark.range(0, 400).selectExpr("id AS k", "concat('s', id) AS s").repartition(4))
+    spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold", "2")
+    val (_, jobs) = try graft.JobProfile.jobsOf(spark)(ops.create(spark, tbl,
+      spark.range(0, 400).selectExpr("id AS k", "concat('s', id) AS s").repartition(4)))
+    finally spark.conf.unset("spark.sql.sources.parallelPartitionDiscovery.threshold")
+    assert(jobs.count(_.startsWith("fold at TxLog.scala")) === 1, jobs)
     val snap = ops.latest(tbl)
     val seg = snap.segments.head
     assert(new java.io.File(s"$tbl/$seg").listFiles()
@@ -1474,6 +1475,8 @@ class TxLogSpec extends SparkSpec {
     val late = tenCommitsAfter(40)
     assert(early === late,
       s"(parses, jobs) of ten commits: $early after version 10, $late after version 40")
+    // the checkpointing commit folds its log tail once, not twice
+    assert(late._1 <= 65L, s"ten commits parsed ${late._1} manifests")
     assert(ops.read(spark, tbl).count() === 51L)
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.FooterCounts
+import org.apache.spark.sql.graft.Footers
 import graft.{JobProfile, SparkSpec}
 import graft.io.ParquetIO
 
@@ -224,7 +224,7 @@ class SamplerSpec extends SparkSpec {
       "empty" -> spark.read.schema(li.schema).parquet(s"$base/empty"))
     for ((what, df) <- inputs) {
       val want = df.count()
-      val (got, totalJobs) = JobProfile.jobsOf(spark)(FooterCounts.rowsOf(df))
+      val (got, totalJobs) = JobProfile.jobsOf(spark)(Footers.rowsOf(df))
       assert(got === want && totalJobs.isEmpty, s"$what: $totalJobs")
       assert(Sampler.exact(df, 0.05, 42L).count() === (want * 0.05).toLong, what)
     }
@@ -235,7 +235,7 @@ class SamplerSpec extends SparkSpec {
     val plain = inputs.head._2
     spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold", "2")
     try {
-      val (got, countJobs) = JobProfile.jobsOf(spark)(FooterCounts.rowsOf(plain))
+      val (got, countJobs) = JobProfile.jobsOf(spark)(Footers.rowsOf(plain))
       assert(got === plain.count() && countJobs.size === 1, countJobs)
       val (rows, footerJobs) = JobProfile.jobsOf(spark)(ParquetIO.rowCount(spark, s"$base/plain"))
       assert(rows === plain.count() && footerJobs.isEmpty, footerJobs)
@@ -253,17 +253,17 @@ class SamplerSpec extends SparkSpec {
       val df = spark.read.schema(li.schema).parquet(dir)
       val want = df.count()
       assert(want > 0 && want < total)
-      val (got, totalJobs) = JobProfile.jobsOf(spark)(FooterCounts.rowsOf(df))
+      val (got, totalJobs) = JobProfile.jobsOf(spark)(Footers.rowsOf(df))
       assert(got === want && totalJobs.size === 1, totalJobs)
       assert(Sampler.exact(df, 0.05, 42L).count() === (want * 0.05).toLong)
     } finally spark.conf.unset("spark.sql.files.ignoreCorruptFiles")
   }
 
-  test("Sampler.scala counts no rows itself: every total goes through FooterCounts.rowsOf") {
+  test("Sampler.scala counts no rows itself: every total goes through Footers.rowsOf") {
     val src = Files.readString(Paths.get("src/main/scala/graft/operators/Sampler.scala"))
-    assert(src.contains("FooterCounts.rowsOf("))
+    assert(src.contains("Footers.rowsOf("))
     assert(!"""\.count\(\s*\)""".r.findFirstIn(src).isDefined,
-      "a .count() in Sampler.scala runs a job FooterCounts.rowsOf may avoid")
+      "a .count() in Sampler.scala runs a job Footers.rowsOf may avoid")
   }
 
   test("exactN caps at total and handles n=0") {
